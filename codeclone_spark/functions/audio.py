@@ -4,7 +4,8 @@ into one for the same reason, ``analysis/units.py:153``; its per-file error
 rows instead of exceptions come from ``core/worker.py:46-94``).
 
 Design for 100 TB:
-- ``mapInPandas`` over (clips LEFT JOIN fixtures): Arrow batches cross the
+- ``mapInPandas`` over the bare clips scan (and, for SNR, over the small
+  sha-mismatch subset joined to its fixture PCM): Arrow batches cross the
   JVM<->Python boundary once; no row-at-a-time Python UDFs anywhere.
 - Heavy binary columns (``bytes``, ``pcm_ref``) are consumed inside the
   batch and NOT emitted — downstream rules shuffle only small scalar facts,
@@ -32,41 +33,6 @@ MAX_CLIP_BYTES = 20 * 1024 * 1024  # per-clip guard (reference MAX_FILE_SIZE)
 DUR_TOLERANCE_MS = 5.0
 SNR_MIN_DB = 30.0
 
-# Output columns appended by the facts pass (schema.FACTS_SCHEMA order).
-FACT_COLUMNS = [
-    "decode_ok",
-    "error_kind",
-    "decoded_samples",
-    "decoded_dur_ms",
-    "pcm_sha256",
-    "rms",
-    "peak",
-    "clipping_ratio",
-    "silence_ratio",
-    "spectral_flatness",
-    "dominant_freq_hz",
-    "band_energies",
-    "snr_db",
-    "fixture_status",
-    "transcript_match",
-]
-
-# Input columns the pass consumes and drops (never shuffled downstream).
-CONSUMED_COLUMNS = ["bytes", "pcm_ref"]
-
-# Carried-through identity/metadata columns.
-CARRIED_COLUMNS = [
-    "clip_id",
-    "sr_hz",
-    "dur_ms",
-    "codec",
-    "transcript",
-    "part",
-    "fx_sha256",
-    "expected_transcript",
-    "expected_dur_ms",
-]
-
 
 def _nfc(s: Any) -> str | None:
     if s is None or (isinstance(s, float) and np.isnan(s)):
@@ -74,91 +40,6 @@ def _nfc(s: Any) -> str | None:
     return unicodedata.normalize("NFC", str(s))
 
 
-def _facts_for_row(
-    payload: bytes | None,
-    codec: str | None,
-    sr_hz: Any,
-    pcm_ref: bytes | None,
-    fx_sha: str | None,
-    transcript: Any,
-    expected_transcript: Any,
-) -> dict[str, Any]:
-    out: dict[str, Any] = {
-        "decode_ok": False,
-        "error_kind": None,
-        "decoded_samples": None,
-        "decoded_dur_ms": None,
-        "pcm_sha256": None,
-        "rms": None,
-        "peak": None,
-        "clipping_ratio": None,
-        "silence_ratio": None,
-        "spectral_flatness": None,
-        "dominant_freq_hz": None,
-        "band_energies": None,
-        "snr_db": None,
-        "fixture_status": "missing_fixture" if fx_sha is None else "checked",
-        "transcript_match": None,
-    }
-
-    # Transcript equality (NFC-normalized exact match) is independent of decode.
-    exp_t = _nfc(expected_transcript)
-    got_t = _nfc(transcript)
-    if exp_t is not None:
-        out["transcript_match"] = bool(got_t == exp_t)
-
-    if payload is None:
-        out["error_kind"] = "null_bytes"
-        if fx_sha is not None:
-            out["fixture_status"] = "undecodable"
-        return out
-    if len(payload) > MAX_CLIP_BYTES:
-        out["error_kind"] = "clip_too_large"
-        if fx_sha is not None:
-            out["fixture_status"] = "undecodable"
-        return out
-
-    try:
-        pcm = decode_pcm(codec, bytes(payload))
-    except Exception:
-        out["error_kind"] = "undecodable"
-        if fx_sha is not None:
-            out["fixture_status"] = "undecodable"
-        return out
-
-    out["decode_ok"] = True
-    n = int(pcm.shape[0])
-    out["decoded_samples"] = n
-    sr = int(sr_hz) if sr_hz is not None and not pd.isna(sr_hz) else None
-    if sr and sr > 0:
-        out["decoded_dur_ms"] = float(n * 1000.0 / sr)
-
-    x = pcm.astype(np.float64) / 32768.0
-    if n:
-        out["rms"] = float(np.sqrt(np.mean(x * x)))
-        out["peak"] = float(np.max(np.abs(x)))
-        out["clipping_ratio"] = float(np.mean(np.abs(pcm) >= 32767))
-        out.update(_spectral_facts(x, int(sr) if sr else None))
-    out["pcm_sha256"] = hashlib.sha256(pcm.astype("<i2").tobytes()).hexdigest()
-
-    if pcm_ref is not None:
-        ref = np.frombuffer(bytes(pcm_ref), dtype="<i2")
-        if ref.shape[0] == n and n > 0:
-            if out["pcm_sha256"] == fx_sha:
-                out["snr_db"] = LOSSLESS_SNR_DB
-            else:
-                r = ref.astype(np.float64)
-                err = r - pcm.astype(np.float64)
-                ep = float(np.sum(err * err))
-                sp = float(np.sum(r * r))
-                out["snr_db"] = (
-                    LOSSLESS_SNR_DB if ep == 0.0 else 10.0 * np.log10(max(sp, 1e-12) / ep)
-                )
-        # length mismatch vs fixture -> snr stays null; length rule flags it
-    return out
-
-
-# ----------------------------------------------------- two-phase variant --
 # Phase A: decode over the bare clips scan — map-only, the heavy `bytes`
 # column never enters a shuffle.  Phase B (plans/facts.py) joins small meta
 # columns; phase C re-reads PCM only for sha-mismatched rows to compute SNR.
@@ -320,27 +201,3 @@ def snr_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
             ids.append(cids[i])
             snrs.append(snr)
         yield pd.DataFrame({"clip_id": ids, "snr_db": snrs})
-
-
-def facts_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """``mapInPandas`` body: consume bytes/pcm_ref, emit carried + fact cols."""
-    for pdf in batches:
-        n = len(pdf)
-        facts: dict[str, list] = {c: [None] * n for c in FACT_COLUMNS}
-        payloads = pdf["bytes"].to_numpy(dtype=object)
-        codecs = pdf["codec"].to_numpy(dtype=object)
-        srs = pdf["sr_hz"].to_numpy(dtype=object)
-        refs = pdf["pcm_ref"].to_numpy(dtype=object)
-        shas = pdf["fx_sha256"].to_numpy(dtype=object)
-        trs = pdf["transcript"].to_numpy(dtype=object)
-        exps = pdf["expected_transcript"].to_numpy(dtype=object)
-        for i in range(n):
-            row = _facts_for_row(
-                payloads[i], codecs[i], srs[i], refs[i], shas[i], trs[i], exps[i]
-            )
-            for k, v in row.items():
-                facts[k][i] = v
-        out = pdf[CARRIED_COLUMNS].copy()
-        for k in FACT_COLUMNS:
-            out[k] = facts[k]
-        yield out

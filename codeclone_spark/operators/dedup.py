@@ -329,7 +329,8 @@ def lsh_verified_pairs(
     recompute-on-executor-loss rolls back to the scratch file (the same
     checkpoint discipline as connected_components).  With
     ``scratch_dir=None`` the plan stays fully lazy/lineage-complete —
-    right for small corpora and required by the SQL-twin oracle harness.
+    right for small corpora and callers without a writable scratch
+    location; every registered query passes one, as the engine does.
 
     Returns (id_a, id_b, jaccard) for candidates with exact Jaccard >=
     *threshold*; a pair LSH never proposed is absent even if its true

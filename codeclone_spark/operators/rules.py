@@ -177,7 +177,7 @@ TABLE_RULE_IDS = ["uniq:clip_id"]
 # gets one table-scope verdict row when enabled (drift-rule convention).
 NEARDUP_RULE_ID = "neardup:transcript"
 
-# Rule-intrinsic triage severity (reference risk/severity bucketing:
+# Rule-intrinsic triage severity (reference risk/severity classes:
 # metrics registry families carry a risk class; errors are correctness
 # breaks, warns are quality signals).  Gating is budget-driven either way —
 # severity buckets the triage report, it does not bypass gates.
@@ -303,7 +303,8 @@ def evaluate_uniqueness(facts: DataFrame) -> DataFrame:
     """Exact duplicate detection on clip_id (reference ``build_groups``
     grouping.py:38-45 keeps groups with size > 1).  clip_id is a high-card
     uniform hash key, so this shuffle has no skew; map-side partial counts
-    make it one efficient exchange."""
+    make it one efficient exchange.  Reads only ``clip_id`` and ``part``, so
+    the runner feeds it a column-pruned scan of the whole table."""
     dups = (
         facts.groupBy("clip_id")
         .agg(
@@ -318,6 +319,7 @@ def evaluate_uniqueness(facts: DataFrame) -> DataFrame:
         F.col("clip_id"),
         F.concat_ws("", F.lit("count="), F.col("n").cast("string")).alias("observed"),
         F.lit("unique clip_id").alias("expected"),
+        F.lit(RULE_SEVERITY["uniq:clip_id"]).alias("severity"),
     )
 
 
@@ -355,17 +357,6 @@ def qsk_bin(spec: NumericColSpec) -> Column:
     return F.when(F.col(spec.name).isNotNull() & (F.col(spec.name) >= 0), idx)
 
 
-def qsketch_counts(facts: DataFrame, spec: NumericColSpec) -> DataFrame:
-    """(part, bin, n) sketch partials for one registry column — mergeable
-    by summing counts."""
-    return (
-        facts.select("part", qsk_bin(spec).alias("bin"))
-        .filter(F.col("bin").isNotNull())
-        .groupBy("part", "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def qsketch_counts_multi(
     facts: DataFrame, specs: tuple[NumericColSpec, ...]
 ) -> DataFrame:
@@ -391,12 +382,12 @@ def qsketch_counts_multi(
 def partition_aggregates(facts: DataFrame) -> DataFrame:
     """Per-partition stats in one groupBy (partial+final hash agg); only
     the fine-grained quantile sketch lives in its own tiny aggregation
-    (:func:`qsketch_counts` — codegen-size reasons).  Histogram partials
+    (:func:`qsketch_counts_multi` — codegen-size reasons).  Histogram partials
     are mergeable arrays so drift can be computed from the ledger across
     resumable waves without rescanning data."""
     sr_cats = [F.sum((F.col("sr_hz") == v).cast("long")).alias(f"sr_{v}") for v in ALLOWED_SR]
     # one (null, min, max, mean) quartet per registry column — the
-    # mergeable quantile SKETCH is aggregated separately (qsketch_counts)
+    # mergeable quantile SKETCH is aggregated separately (qsketch_counts_multi)
     # to keep this plan's codegen unit small
     col_aggs = []
     for spec in NUMERIC_STATS_COLUMNS:

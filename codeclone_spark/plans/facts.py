@@ -1,4 +1,5 @@
-"""Facts stage: clips ⟕ fixtures → fused decode pass → small facts frame.
+"""Facts stage: clips → map-only decode → fixture meta join → SNR for the
+sha-mismatched suspects → small facts frame (``build_facts``).
 
 Scale notes (the plan we want at 100 TB, verified via .explain in tests):
 - Filters on ``part`` (resume pruning) hit the hive/Iceberg partition columns
@@ -29,11 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from codeclone_spark.functions.audio import (
-    decode_map_in_pandas,
-    facts_map_in_pandas,
-    snr_map_in_pandas,
-)
+from codeclone_spark.functions.audio import decode_map_in_pandas, snr_map_in_pandas
 from codeclone_spark.synth import LOSSLESS_SNR_DB
 
 FACTS_OUT_SCHEMA = StructType(
@@ -88,15 +85,6 @@ def read_fixtures_pcm(spark: SparkSession, data_dir: str) -> DataFrame:
     return spark.read.parquet(f"{data_dir}/fixtures_pcm")
 
 
-def read_fixtures(spark: SparkSession, data_dir: str) -> DataFrame:
-    """Joined meta+PCM view (the full_join strategy / streaming path)."""
-    return read_fixtures_meta(spark, data_dir).join(
-        read_fixtures_pcm(spark, data_dir).select("clip_id", "pcm_ref"),
-        "clip_id",
-        "left",
-    )
-
-
 DECODE_OUT_SCHEMA = StructType(
     [
         StructField("clip_id", StringType()),
@@ -147,53 +135,46 @@ def build_facts(
     clips: DataFrame,
     fixtures_meta: DataFrame,
     fixtures_pcm: DataFrame,
-    parts: list[str] | None = None,
     force_smj: bool = False,
-    snr_strategy: str = "two_phase",
-) -> DataFrame:
-    """Facts frame for the rule pass.  Two strategies:
+) -> tuple[DataFrame, DataFrame]:
+    """Facts frame for the rule pass — the only way facts are built:
 
-    ``two_phase`` (default — the 100 TB plan):
-      A. decode over the bare clips scan (map-only: the heavy ``bytes``
-         column NEVER enters a shuffle; it dies inside the Arrow batch);
-      B. join the small fixture META columns (sha/transcript/dur —
-         ~100 B/row) on clip_id — a cheap shuffle of scalars;
-      C. rows whose decoded sha mismatches the fixture sha (lossy codecs,
-         corrupted encodes) re-read ``bytes`` + ``pcm_ref`` via semi-joins
-         and compute SNR — traffic proportional to the SUSPECT subset, not
-         the table.  sha-equal rows get SNR = lossless sentinel for free.
+    A. decode over the bare clips scan (map-only: the heavy ``bytes``
+       column NEVER enters a shuffle; it dies inside the Arrow batch);
+    B. join the small fixture META columns (sha/transcript/dur —
+       ~100 B/row) on clip_id — a cheap shuffle of scalars;
+    C. rows whose decoded sha mismatches the fixture sha (lossy codecs,
+       corrupted encodes) re-read ``bytes`` + ``pcm_ref`` via semi-joins
+       and compute SNR — traffic proportional to the SUSPECT subset, not
+       the table.  sha-equal rows get SNR = lossless sentinel for free.
 
-    ``full_join`` (fallback for lossy-dominated tables where phase C would
-      approach 100% anyway): single clips ⟕ fixtures join with the fused
-      decode — shuffles payloads once, decodes once.
-
-    *parts* restricts to a partition subset (resume pruning, reference
+    Phase A is persisted so bytes are decoded exactly once: the suspect
+    partition collect here is the FIRST and ONLY action over the uncached
+    decode, so it fills the cache by itself (one job cannot race itself),
+    and phase C then prunes its re-scans to those directories statically.
+    Returns ``(facts, decoded)``; the caller unpersists *decoded* once it
+    has consumed *facts*.  Callers restrict *clips*/*fixtures_pcm* to a
+    partition subset themselves (resume pruning, reference
     core/discovery.py:118-190).  *force_smj* disables broadcast to exercise
     the sort-merge path the north_star demands for cluster-scale fixtures.
     """
-    if parts is not None:
-        clips = clips.filter(F.col("part").isin(parts))
-        fixtures_pcm = fixtures_pcm.filter(F.col("part").isin(parts))
-
-    if snr_strategy == "full_join":
-        fixtures = fixtures_meta.join(
-            fixtures_pcm.select("clip_id", "pcm_ref"), "clip_id", "left"
-        ).select(
-            "clip_id", "fx_sha256", "pcm_ref", "expected_transcript", "expected_dur_ms"
-        )
-        fx = fixtures.hint("merge") if force_smj else fixtures
-        joined = clips.join(fx, "clip_id", "left")
-        return joined.mapInPandas(facts_map_in_pandas, schema=FACTS_OUT_SCHEMA)
-
-    # --- phase A: map-only decode (no shuffle of bytes)
-    decoded = decode_stage(clips)
-    return assemble_facts(decoded, clips, fixtures_meta, fixtures_pcm, force_smj)
+    decoded = decode_stage(clips).persist()
+    suspect_parts = sorted(
+        r["part"]
+        for r in suspect_filter(join_meta(decoded, fixtures_meta, force_smj))
+        .select("part")
+        .distinct()
+        .collect()
+    )
+    facts = assemble_facts(
+        decoded, clips, fixtures_meta, fixtures_pcm, suspect_parts, force_smj
+    )
+    return facts, decoded
 
 
 def decode_stage(clips: DataFrame) -> DataFrame:
-    """Phase A alone — callers should persist() this: both the rule pass and
-    the SNR-suspect branch consume it, and caching it means audio bytes are
-    decoded exactly once per wave."""
+    """Phase A alone (``build_facts`` persists it: both the rule pass and
+    the SNR-suspect branch consume it)."""
     return clips.mapInPandas(decode_map_in_pandas, schema=DECODE_OUT_SCHEMA)
 
 
@@ -225,13 +206,12 @@ def assemble_facts(
     clips: DataFrame,
     fixtures_meta: DataFrame,
     fixtures_pcm: DataFrame,
+    suspect_parts: list[str],
     force_smj: bool = False,
-    suspect_parts: list[str] | None = None,
 ) -> DataFrame:
-    """Phases B+C.  *suspect_parts*: when the caller has materialized the
-    suspect partition list (runner does, from the cached decode stage), the
-    phase-C re-scans prune statically to those directories — guaranteed,
-    no reliance on dynamic partition pruning."""
+    """Phases B+C.  *suspect_parts* is the materialized suspect partition
+    list: the phase-C re-scans prune statically to those directories —
+    guaranteed, no reliance on dynamic partition pruning."""
     # --- phase B: small-column meta join
     f = join_meta(decoded, fixtures_meta, force_smj)
 
@@ -252,25 +232,17 @@ def assemble_facts(
     # The suspect id-list MUST be broadcast: a sort-merge semi-join here
     # would shuffle the full bytes/pcm_ref columns — the exact cost this
     # strategy exists to avoid (confirmed via stage metrics: SMJ planned
-    # ~700 core-seconds of payload shuffle at 20k rows).  If suspects ever
-    # outgrow broadcast (lossy-dominated table), use snr_strategy=full_join.
-    suspects = suspect_filter(f).select("clip_id", "part")
-    suspect_ids = suspects.select("clip_id")
-    if suspect_parts is not None:
-        # static literal pruning: only the suspect directories are listed,
-        # let alone read
-        payload_base = clips.filter(F.col("part").isin(suspect_parts))
-        ref_base = fixtures_pcm.filter(F.col("part").isin(suspect_parts))
-    else:
-        # lazy fallback: broadcast the suspect-part set; joining it against
-        # the hive partition column prunes directories dynamically
-        sp = suspects.select("part").distinct()
-        payload_base = clips.join(F.broadcast(sp), "part")
-        ref_base = fixtures_pcm.join(F.broadcast(sp), "part")
-    payload_side = payload_base.join(
+    # ~700 core-seconds of payload shuffle at 20k rows).  The limit: on a
+    # lossy-dominated table nearly every sha mismatches, so this broadcast
+    # approaches every clip id.
+    suspect_ids = suspect_filter(f).select("clip_id")
+    # static literal pruning: only the suspect directories are listed, let
+    # alone read
+    in_suspect = F.col("part").isin(suspect_parts)
+    payload_side = clips.filter(in_suspect).join(
         F.broadcast(suspect_ids), "clip_id", "left_semi"
     ).select("clip_id", "bytes", "codec")
-    ref_side = ref_base.join(
+    ref_side = fixtures_pcm.filter(in_suspect).join(
         F.broadcast(suspect_ids), "clip_id", "left_semi"
     ).select("clip_id", "pcm_ref")
     snr = (

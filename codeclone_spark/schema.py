@@ -75,7 +75,7 @@ VIOLATIONS_SCHEMA = StructType(
         StructField("clip_id", StringType(), True),
         StructField("observed", StringType(), True),
         StructField("expected", StringType(), True),
-        # triage severity (reference risk bucketing: error gates, warn/info
+        # triage severity (reference risk classes: error gates, warn/info
         # inform); severity is rule-intrinsic, carried per row for triage
         StructField("severity", StringType(), False),
     ]

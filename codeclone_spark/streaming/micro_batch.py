@@ -16,8 +16,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from codeclone_spark.operators.rules import evaluate_row_rules
-from codeclone_spark.plans.facts import FACTS_OUT_SCHEMA, read_fixtures
-from codeclone_spark.functions.audio import facts_map_in_pandas
+from codeclone_spark.plans.facts import (
+    build_facts,
+    read_fixtures_meta,
+    read_fixtures_pcm,
+)
 from codeclone_spark.schema import CLIPS_SCHEMA
 
 
@@ -29,12 +32,12 @@ def stream_validate(
     checkpoint_dir: str,
     trigger_once: bool = True,
 ) -> StreamingQuery:
-    """Micro-batch validation: each batch runs the same fused decode pass +
-    single-scan rule evaluation as the batch engine, appending violation
-    parquet.  `trigger once` processes the backlog and stops (test mode)."""
-    from codeclone_spark.plans.facts import read_fixtures
-
-    fixtures = read_fixtures(spark, fixtures_dir)
+    """Micro-batch validation: each batch builds its facts exactly as a
+    batch-engine wave does (``build_facts``) and runs the single-scan rule
+    evaluation, appending violation parquet.  `trigger once` processes the
+    backlog and stops (test mode)."""
+    fixtures_meta = read_fixtures_meta(spark, fixtures_dir)
+    fixtures_pcm = read_fixtures_pcm(spark, fixtures_dir)
 
     stream = (
         spark.readStream.schema(CLIPS_SCHEMA)
@@ -43,17 +46,18 @@ def stream_validate(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        joined = batch_df.join(fixtures, "clip_id", "left")
-        facts = joined.mapInPandas(facts_map_in_pandas, schema=FACTS_OUT_SCHEMA)
-        viol = evaluate_row_rules(facts)
+        facts, decoded = build_facts(batch_df, fixtures_meta, fixtures_pcm)
         # Idempotent sink: foreachBatch is at-least-once, so a retried batch
         # is reprocessed under the SAME batch_id — writing each batch to its
         # own batch_id=<id> partition dir with overwrite makes the retry a
         # no-op instead of an append-duplication (the reader recovers
         # batch_id via partition discovery).
-        viol.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={int(batch_id)}")
-        )
+        try:
+            evaluate_row_rules(facts).write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch_id={int(batch_id)}")
+            )
+        finally:
+            decoded.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -15,9 +15,9 @@ from codeclone_spark.plans.facts import (
 )
 
 
-def _plan(df) -> str:
+def _plan(df, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+        df._jdf.queryExecution(), mode
     )
 
 
@@ -42,22 +42,24 @@ def test_column_pruning_uniqueness_scan(spark, tiny_dir):
 
 def test_fixture_join_broadcast_small(spark, tiny_dir):
     clips = read_clips(spark, tiny_dir)
-    facts = build_facts(
+    facts, decoded = build_facts(
         clips, read_fixtures_meta(spark, tiny_dir), read_fixtures_pcm(spark, tiny_dir)
     )
     plan = _plan(facts)
+    decoded.unpersist()
     assert "BroadcastHashJoin" in plan  # tiny fixture meta fits the threshold
 
 
 def test_fixture_join_smj_forced(spark, tiny_dir):
     clips = read_clips(spark, tiny_dir)
-    facts = build_facts(
+    facts, decoded = build_facts(
         clips,
         read_fixtures_meta(spark, tiny_dir),
         read_fixtures_pcm(spark, tiny_dir),
         force_smj=True,
     )
     plan = _plan(facts)
+    decoded.unpersist()
     assert "SortMergeJoin" in plan  # the cluster-scale fixtures path
 
 
@@ -75,22 +77,23 @@ def test_two_phase_decode_is_map_only(spark, tiny_dir):
 
 
 def test_row_rules_are_single_pass_no_shuffle(spark, tiny_dir):
-    """All row rules evaluate in one projection+generate over facts —
-    an Exchange here would mean a per-rule shuffle creep.  Uses the
-    full_join strategy whose facts plan is shuffle-free after the join."""
+    """All row rules evaluate in one projection+generate over facts — an
+    Exchange added by the rule pass would mean a per-rule shuffle creep.
+    The facts plan itself shuffles (SNR aggregation, suspect join), so the
+    rule plan may hold exactly the facts plan's hash exchanges, no more.
+    Counted in the simple explain, which prints each as
+    ``Exchange hashpartitioning(...)``."""
     clips = read_clips(spark, tiny_dir)
-    facts = build_facts(
-        clips,
-        read_fixtures_meta(spark, tiny_dir),
-        read_fixtures_pcm(spark, tiny_dir),
-        snr_strategy="full_join",
+    facts, decoded = build_facts(
+        clips, read_fixtures_meta(spark, tiny_dir), read_fixtures_pcm(spark, tiny_dir)
     )
-    viol = evaluate_row_rules(facts)
-    plan = _plan(viol)
-    body = plan.split("== Physical Plan ==")[-1]
-    # the only allowed exchange is the fixture join's broadcast
-    assert "Exchange hashpartitioning" not in body
-    assert "Generate explode" in body or "Generate" in body
+    facts_body = _plan(facts, "simple").split("== Physical Plan ==")[-1]
+    body = _plan(evaluate_row_rules(facts), "simple").split("== Physical Plan ==")[-1]
+    decoded.unpersist()
+    shuffles = facts_body.count("Exchange hashpartitioning")
+    assert shuffles > 0  # the probe sees the facts plan's own shuffles
+    assert body.count("Exchange hashpartitioning") == shuffles
+    assert "Generate explode" in body
 
 
 def test_stats_registry_width_adds_zero_wave_jobs(spark):
@@ -200,39 +203,6 @@ def test_filter_pushdown_to_parquet(spark, tiny_dir):
     plan = _plan(q)
     assert "PushedFilters" in plan
     assert "sr_hz" in plan.split("PushedFilters")[1][:200]
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Same-bucketed tables join with SMJ over co-located bucket scans —
-    zero Exchange in the physical plan (the repeated-join scale path)."""
-    from codeclone_spark.operators.bucketing import bucketed_join, save_bucketed
-
-    left = spark.range(0, 1000).selectExpr(
-        "concat('c', id) AS clip_id", "id % 7 AS x"
-    )
-    right = spark.range(0, 1000).selectExpr(
-        "concat('c', id) AS clip_id", "id % 3 AS y"
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        save_bucketed(left, "t_bk_left", "clip_id", 8, path=str(tmp_path / "l"))
-        save_bucketed(right, "t_bk_right", "clip_id", 8, path=str(tmp_path / "r"))
-        joined = bucketed_join(spark, "t_bk_left", "t_bk_right", "clip_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1000
-        # control: the same join on unbucketed frames DOES shuffle
-        plan2 = (
-            left.join(right.withColumnRenamed("y", "y2"), "clip_id")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" in plan2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_bk_left")
-        spark.sql("DROP TABLE IF EXISTS t_bk_right")
 
 
 def test_text_queries_prune_document_columns(spark):

@@ -124,6 +124,29 @@ def test_uniqueness(spark):
     assert len(rows) == 1
     assert rows[0]["clip_id"] == "x"
     assert rows[0]["observed"] == "count=2"
+    assert rows[0]["severity"] == "error"
+
+
+def test_facts_schema_is_build_facts_output(spark, tiny_dir):
+    """The synthetic facts frames above use FACTS_OUT_SCHEMA; the engine's
+    only facts path must produce exactly that shape (names, types, order)
+    so the rule tests exercise the real frame."""
+    from codeclone_spark.plans.facts import (
+        build_facts,
+        read_clips,
+        read_fixtures_meta,
+        read_fixtures_pcm,
+    )
+
+    facts, decoded = build_facts(
+        read_clips(spark, tiny_dir),
+        read_fixtures_meta(spark, tiny_dir),
+        read_fixtures_pcm(spark, tiny_dir),
+    )
+    decoded.unpersist()
+    assert [(f.name, f.dataType) for f in facts.schema] == [
+        (f.name, f.dataType) for f in FACTS_OUT_SCHEMA
+    ]
 
 
 def test_partition_aggregates_histogram(spark):

@@ -9,7 +9,18 @@ from pyspark.sql import functions as F
 from codeclone_spark.streaming import stream_validate, windowed_violation_counts
 
 
-def test_stream_validate_matches_batch(spark, tiny_dir, tmp_path):
+def _viol_tuples(df):
+    cols = ("rule_id", "partition", "clip_id", "observed")
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_stream_validate_matches_batch(spark, tiny_dir, tiny_run, tmp_path):
+    """The streamed row violations equal the batch engine's, row for row
+    (uniq:clip_id is table-scope, so batch-only).  Both build facts through
+    ``plans.facts.build_facts``.  The retired single-join decode differed
+    from it only on ``snr_db`` for sha-equal rows whose fixture PCM was
+    missing or had zero samples: null there versus the lossless sentinel
+    here, and both lie outside the ``audio:snr`` rule's reach."""
     out = str(tmp_path / "viol")
     ckpt = str(tmp_path / "ckpt")
     q = stream_validate(
@@ -27,6 +38,10 @@ def test_stream_validate_matches_batch(spark, tiny_dir, tmp_path):
     assert counts["audio:undecodable"] == 2
     assert counts["audio:snr"] == 2
     assert counts["ref:fixture_missing"] == 100
+    batch = spark.read.parquet(tiny_run.violations_path).filter(
+        F.col("rule_id") != "uniq:clip_id"
+    )
+    assert _viol_tuples(viol) == _viol_tuples(batch)
     # exactly-once: re-running the same stream adds nothing
     q2 = stream_validate(
         spark,
