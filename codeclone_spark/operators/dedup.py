@@ -108,21 +108,6 @@ def minhash_signatures(
     return shingles.groupBy("id").agg(*aggs)
 
 
-def minhash_signature_groups(
-    df: DataFrame, id_col: str, text_col: str, k: int = SHINGLE_K, n_hashes: int = MINHASH_K
-) -> DataFrame:
-    """Near-dup groups = identical full MinHash signature (high-precision
-    variant; LSH banding below is the high-recall variant)."""
-    sigs = minhash_signatures(char_shingles(df, id_col, text_col, k, dedupe=False), n_hashes)
-    sig_key = F.concat_ws("|", *[F.col(f"mh{i}").cast("string") for i in range(n_hashes)])
-    return (
-        sigs.select(F.col("id"), sig_key.alias("signature"))
-        .groupBy("signature")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("id").alias("min_id"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def _banded_signatures(
     df: DataFrame,
     id_col: str,

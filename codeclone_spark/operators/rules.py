@@ -4,6 +4,10 @@ Modeled on the reference's ``METRIC_FAMILIES`` registry
 (``metrics/registry.py:678-783``): each family supplies a *compute* (partial,
 per-partition) and an *aggregate* (final) step plus baseline/gate keys.  Here:
 
+- **One registry**: every rule — row, table, near-dup, drift, schema — is
+  one :class:`Rule` record in :data:`RULES` carrying its scope, severity,
+  SARIF mapping and remediation hint.  The id lists and lookups below are
+  derived from it, never written a second time.
 - **Row rules** are (predicate, observed, expected) column triples over the
   facts frame.  ALL row rules evaluate in ONE scan: each rule becomes a
   ``when(pred, struct(...))`` element of an array column that is filtered and
@@ -20,8 +24,8 @@ Rule-id scheme mirrors ``findings/ids.py:10-23``: ``family:detail[:column]``.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
-from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,184 +42,316 @@ DUR_BIN_EDGES = [0.0, 250.0, 400.0, 600.0, 900.0, 1400.0, 2100.0, 3200.0, 1e9]
 
 
 @dataclass(frozen=True)
-class RowRule:
-    """A row-level violation rule over the facts frame."""
+class Rule:
+    """One validation rule, declared once in :data:`RULES`: the id lists,
+    the severity lookup, the SARIF rule map and the review queue's
+    remediation hints all derive from the registry."""
 
     rule_id: str
-    predicate: Column
-    observed: Column
-    expected: str
-    # applicability guard: rows where the rule simply doesn't apply
-    applicable: Column | None = None
+    # where the rule is evaluated: "row" (the single facts pass), "table"
+    # (its own shuffle), "neardup" (the opt-in clone stage), "drift" or
+    # "schema" (driver-side, against the baseline snapshot)
+    scope: str
+    # Rule-intrinsic triage severity (reference risk/severity classes:
+    # errors are correctness breaks, warns are quality signals).  Gating is
+    # budget-driven either way — severity buckets the triage report and
+    # sets the SARIF level, it does not bypass gates.
+    severity: str
+    # Stable external SARIF id: appending a rule gets a NEW id; existing
+    # ids never renumber (the reference keeps CCLONE/CSTRUCT/CDEAD ids
+    # stable the same way so downstream SARIF consumers can pin them).
+    sarif_id: str
+    short: str
+    full: str
+    family: str
+    # Remediation hint (reference report/suggestions.py maps finding kinds
+    # to suggested actions the same way).  Deterministic — it lands in the
+    # canonical report's review queue and its golden snapshots.
+    action: str = "inspect exemplar violations and file a data-quality issue"
+    # row rules only: the expected text, and a builder of (predicate,
+    # observed, applicable-or-None) — Column expressions need a live
+    # session, so they are built per evaluation, never at import
+    expected: str = ""
+    exprs: Callable[[], tuple[Column, Column, Column | None]] | None = None
 
 
 def _s(c: Column) -> Column:
     return c.cast("string")
 
 
-def row_rules() -> list[RowRule]:
-    """The registry. Order is part of the output contract (deterministic)."""
-    return [
-        RowRule(
-            "audio:undecodable",
+# The registry.  Row-rule order is part of the output contract
+# (deterministic evaluation order).
+RULES: tuple[Rule, ...] = (
+    Rule(
+        "audio:undecodable", "row", "error",
+        "CCSV001", "Undecodable audio payload",
+        "The clip's bytes failed to decode under its declared codec within "
+        "resource limits.", "audio",
+        action="re-encode or quarantine the payloads; audit the ingest codec "
+        "pipeline for this partition",
+        expected="decodable audio payload",
+        exprs=lambda: (
             F.col("error_kind").isNotNull(),
             F.col("error_kind"),
-            "decodable audio payload",
+            None,
         ),
-        RowRule(
-            "audio:len_consistency",
+    ),
+    Rule(
+        "audio:len_consistency", "row", "error",
+        "CCSV003", "Sample-rate / duration inconsistency",
+        "Declared sr_hz/dur_ms disagree with the decoded sample count.",
+        "audio",
+        action="recompute header dur_ms/sr_hz from the decoded stream at "
+        "ingest",
+        expected=f"within {DUR_TOLERANCE_MS:g}ms of header dur_ms",
+        exprs=lambda: (
             F.abs(F.col("decoded_dur_ms") - F.col("dur_ms")) > DUR_TOLERANCE_MS,
             F.concat_ws(
                 "",
                 F.lit("decoded_dur_ms="),
                 F.round("decoded_dur_ms", 2).cast("string"),
             ),
-            f"within {DUR_TOLERANCE_MS:g}ms of header dur_ms",
-            applicable=F.col("decoded_dur_ms").isNotNull()
-            & F.col("dur_ms").isNotNull(),
+            F.col("decoded_dur_ms").isNotNull() & F.col("dur_ms").isNotNull(),
         ),
-        RowRule(
-            "audio:snr",
+    ),
+    Rule(
+        "audio:snr", "row", "error",
+        "CCSV002", "Decoded PCM below SNR threshold",
+        "Decoded PCM does not match the reference fixture within the "
+        "configured SNR floor (allclose at SNR>=30dB).", "audio",
+        action="re-master from source or refresh the reference fixture PCM "
+        "for these clips",
+        expected=f"SNR >= {SNR_MIN_DB:g} dB vs fixture PCM",
+        exprs=lambda: (
             F.col("snr_db") < SNR_MIN_DB,
             F.concat_ws("", F.lit("snr_db="), F.round("snr_db", 2).cast("string")),
-            f"SNR >= {SNR_MIN_DB:g} dB vs fixture PCM",
-            applicable=F.col("snr_db").isNotNull(),
+            F.col("snr_db").isNotNull(),
         ),
-        RowRule(
-            "audio:transcript_eq",
+    ),
+    Rule(
+        "audio:transcript_eq", "row", "error",
+        "CCSV004", "Transcript mismatch vs fixture",
+        "Transcript differs from the reference fixture (exact, NFC-"
+        "canonicalized equality).", "audio",
+        action="re-run transcription or update fixtures if the new "
+        "transcripts are authoritative",
+        expected="exact (NFC) match with fixture transcript",
+        exprs=lambda: (
             ~F.col("transcript_match"),
             F.col("transcript"),
-            "exact (NFC) match with fixture transcript",
             # null/empty transcripts belong to stats:null:transcript, not here
-            applicable=F.col("transcript_match").isNotNull()
+            F.col("transcript_match").isNotNull()
             & F.col("transcript").isNotNull()
             & (F.length("transcript") > 0),
         ),
-        RowRule(
-            "audio:silence",
+    ),
+    Rule(
+        "audio:silence", "row", "warn",
+        "CCSV016", "Silent audio",
+        "Decoded PCM is effectively silent (RMS below floor).", "audio",
+        action="review capture gain staging; drop or re-record silent clips",
+        expected="audible content (silence_ratio <= 0.98)",
+        exprs=lambda: (
             F.col("silence_ratio") > 0.98,
             F.concat_ws(
                 "", F.lit("silence_ratio="), F.round("silence_ratio", 4).cast("string")
             ),
-            "audible content (silence_ratio <= 0.98)",
-            applicable=F.col("silence_ratio").isNotNull(),
+            F.col("silence_ratio").isNotNull(),
         ),
-        RowRule(
-            "audio:clipping",
+    ),
+    Rule(
+        "audio:clipping", "row", "warn",
+        "CCSV017", "Clipped audio",
+        "Decoded PCM clips (peak-saturation ratio above ceiling).", "audio",
+        action="review capture gain staging; re-normalize clipped clips",
+        expected="clipping_ratio <= 0.02",
+        exprs=lambda: (
             F.col("clipping_ratio") > 0.02,
             F.concat_ws(
                 "", F.lit("clipping_ratio="), F.round("clipping_ratio", 4).cast("string")
             ),
-            "clipping_ratio <= 0.02",
-            applicable=F.col("clipping_ratio").isNotNull(),
+            F.col("clipping_ratio").isNotNull(),
         ),
-        RowRule(
-            "ref:fixture_missing",
+    ),
+    Rule(
+        "ref:fixture_missing", "row", "error",
+        "CCSV008", "Missing reference fixture",
+        "No fixture row exists for this clip_id (referential anti-join).",
+        "referential",
+        action="regenerate reference fixtures for this partition (or gate "
+        "ingest on fixture delivery)",
+        expected="fixture row present for clip_id",
+        exprs=lambda: (
             F.col("fixture_status") == "missing_fixture",
             F.lit("missing_fixture"),
-            "fixture row present for clip_id",
+            None,
         ),
-        RowRule(
-            "stats:null:dur_ms",
-            F.col("dur_ms").isNull(),
-            F.lit("<null>"),
-            "non-null dur_ms",
-        ),
-        RowRule(
-            "stats:null:transcript",
+    ),
+    Rule(
+        "stats:null:dur_ms", "row", "warn",
+        "CCSV005", "Null dur_ms", "dur_ms is NULL.", "stats",
+        action="backfill dur_ms upstream or drop rows at ingest",
+        expected="non-null dur_ms",
+        exprs=lambda: (F.col("dur_ms").isNull(), F.lit("<null>"), None),
+    ),
+    Rule(
+        "stats:null:transcript", "row", "warn",
+        "CCSV006", "Null or empty transcript",
+        "transcript is NULL or empty after canonicalization.", "stats",
+        action="backfill transcripts upstream or route to the transcription "
+        "queue",
+        expected="non-empty transcript",
+        exprs=lambda: (
             F.col("transcript").isNull() | (F.length("transcript") == 0),
             F.when(F.col("transcript").isNull(), F.lit("<null>")).otherwise(
                 F.lit("<empty>")
             ),
-            "non-empty transcript",
+            None,
         ),
-        RowRule(
-            "stats:range:dur_ms",
+    ),
+    Rule(
+        "stats:range:dur_ms", "row", "error",
+        "CCSV018", "dur_ms out of range",
+        "dur_ms is outside the configured validity range.", "stats",
+        action="clamp or quarantine out-of-range durations at ingest",
+        expected=f"dur_ms in [{DUR_BOUNDS_MS[0]}, {DUR_BOUNDS_MS[1]}]",
+        exprs=lambda: (
             (F.col("dur_ms") < DUR_BOUNDS_MS[0]) | (F.col("dur_ms") > DUR_BOUNDS_MS[1]),
             _s(F.col("dur_ms")),
-            f"dur_ms in [{DUR_BOUNDS_MS[0]}, {DUR_BOUNDS_MS[1]}]",
-            applicable=F.col("dur_ms").isNotNull(),
+            F.col("dur_ms").isNotNull(),
         ),
-        RowRule(
-            "stats:domain:sr_hz",
+    ),
+    Rule(
+        "stats:domain:sr_hz", "row", "error",
+        "CCSV007", "Sample rate outside allowed set",
+        "sr_hz is not one of the allowed sample rates.", "stats",
+        action="resample to an allowed rate or extend the allowed set "
+        "deliberately",
+        expected=f"sr_hz in {ALLOWED_SR}",
+        exprs=lambda: (
             ~F.col("sr_hz").isin(ALLOWED_SR),
             _s(F.col("sr_hz")),
-            f"sr_hz in {ALLOWED_SR}",
-            applicable=F.col("sr_hz").isNotNull(),
+            F.col("sr_hz").isNotNull(),
         ),
-        RowRule(
-            "stats:domain:codec",
+    ),
+    Rule(
+        "stats:domain:codec", "row", "error",
+        "CCSV019", "Codec outside allowed set",
+        "codec is not one of the allowed codec names.", "stats",
+        action="transcode to an allowed codec or extend the allowed set "
+        "deliberately",
+        expected=f"codec in {ALLOWED_CODECS}",
+        exprs=lambda: (
             ~F.col("codec").isin(ALLOWED_CODECS),
             F.coalesce(F.col("codec"), F.lit("<null>")),
-            f"codec in {ALLOWED_CODECS}",
+            None,
         ),
-    ]
+    ),
+    # evaluated outside the single row pass (its own shuffle)
+    Rule(
+        "uniq:clip_id", "table", "error",
+        "CCSV009", "Duplicate clip_id",
+        "clip_id occurs more than once across the table (exact global "
+        "uniqueness).", "uniqueness",
+        action="deduplicate at ingest; add a clip_id uniqueness constraint "
+        "upstream",
+    ),
+    # Near-dup clone-group rule (opt-in stage, RunConfig.neardup_transcript):
+    # table-scope like uniq:clip_id — clusters span partitions, so the
+    # finding is attributed to min(part) for reporting only and
+    # partition-scoped suppressions are rejected.  NOT in TABLE_RULE_IDS: the
+    # dense verdict grid must not assert "ok (0 violations)" for a stage that
+    # never ran; the rule gets one table-scope verdict row when enabled
+    # (drift-rule convention).
+    Rule(
+        "neardup:transcript", "neardup", "warn",
+        "CCSV022", "New near-dup transcript cluster",
+        "A transitive near-duplicate transcript cluster (LSH + exact-"
+        "Jaccard verified) whose '<min_id>|<size>' key is not in the "
+        "baseline's accepted clones section.", "uniqueness",
+        action="review the new clone groups; purge via the dedup keep-list "
+        "manifest or accept them with --update-baseline",
+    ),
+    Rule(
+        "drift:psi:dur_ms", "drift", "warn",
+        "CCSV010", "dur_ms PSI drift",
+        "Population Stability Index of the dur_ms histogram vs the "
+        "baseline snapshot exceeds the gate.", "drift",
+    ),
+    Rule(
+        "drift:ks:dur_ms", "drift", "warn",
+        "CCSV011", "dur_ms KS drift",
+        "KS statistic of the dur_ms histogram vs baseline exceeds the "
+        "gate.", "drift",
+    ),
+    Rule(
+        "drift:psi:sr_hz", "drift", "warn",
+        "CCSV012", "sr_hz PSI drift",
+        "PSI of the sr_hz distribution vs baseline exceeds the gate.",
+        "drift",
+    ),
+    Rule(
+        "drift:quantile:dur_ms", "drift", "warn",
+        "CCSV013", "dur_ms quantile drift",
+        "Relative delta of p50/p95/p99 vs baseline exceeds the gate.",
+        "drift",
+    ),
+    Rule(
+        "drift:quantile:rms", "drift", "warn",
+        "CCSV020", "rms quantile drift",
+        "Relative delta of decoded-PCM RMS p50/p95/p99 vs baseline exceeds "
+        "the gate.", "drift",
+    ),
+    Rule(
+        "drift:quantile:spectral_flatness", "drift", "warn",
+        "CCSV021", "spectral flatness quantile drift",
+        "Relative delta of decoded-PCM spectral-flatness p50/p95/p99 vs "
+        "baseline exceeds the gate.", "drift",
+    ),
+    # schema-evolution verdicts vs the baseline snapshot (breaking changes
+    # only; added columns are informational, reported not gated)
+    Rule(
+        "schema:removed", "schema", "error",
+        "CCSV014", "Schema column removed",
+        "A column present in the baseline schema is gone (breaking).",
+        "schema",
+    ),
+    Rule(
+        "schema:type_change", "schema", "error",
+        "CCSV015", "Schema column type changed",
+        "A column's type differs from the baseline schema (breaking).",
+        "schema",
+    ),
+)
+RULE_BY_ID = {r.rule_id: r for r in RULES}
+RULE_SEVERITY = {r.rule_id: r.severity for r in RULES}
 
 
-# Static id list (row_rules() builds Column exprs and needs a live session)
-ROW_RULE_IDS = [
-    "audio:undecodable",
-    "audio:len_consistency",
-    "audio:snr",
-    "audio:transcript_eq",
-    "audio:silence",
-    "audio:clipping",
-    "ref:fixture_missing",
-    "stats:null:dur_ms",
-    "stats:null:transcript",
-    "stats:range:dur_ms",
-    "stats:domain:sr_hz",
-    "stats:domain:codec",
-]
-# Rules evaluated outside the single row pass (their own shuffle / driver step)
-TABLE_RULE_IDS = ["uniq:clip_id"]
-# Near-dup clone-group rule (opt-in stage, RunConfig.neardup_transcript):
-# table-scope like uniq:clip_id — clusters span partitions, so the finding
-# is attributed to min(part) for reporting only and partition-scoped
-# suppressions are rejected.  NOT in TABLE_RULE_IDS: the dense verdict grid
-# must not assert "ok (0 violations)" for a stage that never ran; the rule
-# gets one table-scope verdict row when enabled (drift-rule convention).
-NEARDUP_RULE_ID = "neardup:transcript"
+def _ids(scope: str) -> list[str]:
+    return [r.rule_id for r in RULES if r.scope == scope]
 
-# Rule-intrinsic triage severity (reference risk/severity classes:
-# metrics registry families carry a risk class; errors are correctness
-# breaks, warns are quality signals).  Gating is budget-driven either way —
-# severity buckets the triage report, it does not bypass gates.
-RULE_SEVERITY = {
-    "audio:undecodable": "error",
-    "audio:len_consistency": "error",
-    "audio:snr": "error",
-    "audio:transcript_eq": "error",
-    "audio:silence": "warn",
-    "audio:clipping": "warn",
-    "ref:fixture_missing": "error",
-    "stats:null:dur_ms": "warn",
-    "stats:null:transcript": "warn",
-    "stats:range:dur_ms": "error",
-    "stats:domain:sr_hz": "error",
-    "stats:domain:codec": "error",
-    "uniq:clip_id": "error",
-    "neardup:transcript": "warn",
-    "drift:psi:dur_ms": "warn",
-    "drift:ks:dur_ms": "warn",
-    "drift:psi:sr_hz": "warn",
-    "drift:quantile:dur_ms": "warn",
-    "drift:quantile:rms": "warn",
-    "drift:quantile:spectral_flatness": "warn",
-    "schema:removed": "error",
-    "schema:type_change": "error",
-}
-DRIFT_RULE_IDS = [
-    "drift:psi:dur_ms",
-    "drift:ks:dur_ms",
-    "drift:psi:sr_hz",
-    "drift:quantile:dur_ms",
-    "drift:quantile:rms",
-    "drift:quantile:spectral_flatness",
-]
-# schema-evolution verdicts vs the baseline snapshot (breaking changes only;
-# added columns are informational, reported not gated)
-SCHEMA_RULE_IDS = ["schema:removed", "schema:type_change"]
+
+ROW_RULE_IDS = _ids("row")
+TABLE_RULE_IDS = _ids("table")
+(NEARDUP_RULE_ID,) = _ids("neardup")
+DRIFT_RULE_IDS = _ids("drift")
+SCHEMA_RULE_IDS = _ids("schema")
+# scopes whose findings span partitions: attributed to min(part) for
+# reporting only, so partition-scoped suppressions never match them
+CROSS_PARTITION_SCOPES = ("table", "neardup")
+# partition value of table-scope verdicts and findings
+TABLE_SCOPE = "<table>"
+
+# Fallback for ids outside the registry: renders as CCSV999.
+UNMAPPED_RULE = Rule(
+    "", "unmapped", "warn", "CCSV999", "Unmapped validation rule",
+    "Violation of a rule without a stable SARIF id mapping.", "other",
+)
+
+
+def rule_spec(rule_id: str) -> Rule:
+    return RULE_BY_ID.get(rule_id, UNMAPPED_RULE)
+
 
 # Fixed-bin mergeable quantile sketch for dur_ms: 25 ms resolution over the
 # legal duration domain + one overflow bin.  Per-partition count arrays merge
@@ -249,7 +385,7 @@ NUMERIC_STATS_COLUMNS: tuple[NumericColSpec, ...] = (
     # Third registry column: adding it costs ZERO extra wave jobs
     # (qsketch_counts_multi folds all columns into one aggregation —
     # asserted by test_plans_physical) — only this declaration plus a
-    # SARIF id for its drift gate.
+    # RULES record for its drift gate.
     NumericColSpec("spectral_flatness", 1.0 / 128.0, 130),
 )
 # every registry column carries a quantile-drift gate
@@ -264,20 +400,22 @@ def evaluate_row_rules(facts: DataFrame) -> DataFrame:
     explodes.  Catalyst keeps this inside a single WholeStageCodegen project +
     generate — no joins, no extra shuffles."""
     elems = []
-    for r in row_rules():
-        pred = r.predicate
-        if r.applicable is not None:
-            pred = r.applicable & pred
+    for r in RULES:
+        if r.scope != "row":
+            continue
+        pred, observed, applicable = r.exprs()
+        if applicable is not None:
+            pred = applicable & pred
         elems.append(
             F.when(
                 pred,
                 F.struct(
                     F.lit(r.rule_id).alias("rule_id"),
-                    F.coalesce(r.observed.cast("string"), F.lit("<null>")).alias(
+                    F.coalesce(observed.cast("string"), F.lit("<null>")).alias(
                         "observed"
                     ),
                     F.lit(r.expected).alias("expected"),
-                    F.lit(RULE_SEVERITY[r.rule_id]).alias("severity"),
+                    F.lit(r.severity).alias("severity"),
                 ),
             )
         )

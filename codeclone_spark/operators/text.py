@@ -39,10 +39,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col: Column) -> Column:
     """Fraction of characters that are not [A-Za-z0-9 ]."""
     stripped = F.regexp_replace(col, "[A-Za-z0-9 ]", "")
@@ -56,14 +52,6 @@ def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
     toks = tokens(F.lower(col))
     hits = F.size(F.filter(toks, lambda t: t.isin(sw)))
     return F.round(hits / F.greatest(F.size(toks), F.lit(1)).cast("double"), 6)
-
-
-def avg_word_len(col: Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return F.round(total / F.greatest(F.size(toks), F.lit(1)).cast("double"), 6)
 
 
 def quality_score(col: Column) -> Column:

@@ -10,155 +10,29 @@ the rest are pure projections).
 - :func:`render_sarif` — SARIF 2.1.0 with a stable external rule-id
   mapping (reference ``report/renderers/sarif.py:175-343`` maps internal
   finding kinds to ``CCLONE001``-style ids with per-rule severity and
-  taxonomy; ours maps validation rule_ids to ``CCSV###``).  Violation
-  exemplar rows come from the violations parquet via pyarrow — a
-  driver-side render bounded by the exemplar cap, no Spark session needed.
+  taxonomy; ours maps validation rule_ids to ``CCSV###``, read from the
+  rule registry ``operators.rules.RULES``, with the level derived from the
+  rule's severity).  Violation exemplar rows come from the violations
+  parquet via pyarrow — a driver-side render bounded by the exemplar cap,
+  no Spark session needed.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 from typing import Any, Iterator
 
 from codeclone_spark import ENGINE_NAME, ENGINE_VERSION
+from codeclone_spark.operators.rules import TABLE_SCOPE, Rule, rule_spec
 
 SARIF_VERSION = "2.1.0"
 SARIF_SCHEMA = "https://json.schemastore.org/sarif-2.1.0.json"
 
 
-@dataclass(frozen=True)
-class RuleSpec:
-    sarif_id: str
-    short: str
-    full: str
-    level: str  # SARIF: error | warning | note
-    family: str
-
-
-# Stable external ids: appending new rules gets a NEW id; existing ids
-# never renumber (the reference keeps CCLONE/CSTRUCT/CDEAD ids stable the
-# same way so downstream SARIF consumers can pin them).
-RULE_SPECS: dict[str, RuleSpec] = {
-    "audio:undecodable": RuleSpec(
-        "CCSV001", "Undecodable audio payload",
-        "The clip's bytes failed to decode under its declared codec within "
-        "resource limits.", "error", "audio",
-    ),
-    "audio:snr": RuleSpec(
-        "CCSV002", "Decoded PCM below SNR threshold",
-        "Decoded PCM does not match the reference fixture within the "
-        "configured SNR floor (allclose at SNR>=30dB).", "error", "audio",
-    ),
-    "audio:len_consistency": RuleSpec(
-        "CCSV003", "Sample-rate / duration inconsistency",
-        "Declared sr_hz/dur_ms disagree with the decoded sample count.",
-        "error", "audio",
-    ),
-    "audio:transcript_eq": RuleSpec(
-        "CCSV004", "Transcript mismatch vs fixture",
-        "Transcript differs from the reference fixture (exact, NFC-"
-        "canonicalized equality).", "error", "audio",
-    ),
-    "stats:null:dur_ms": RuleSpec(
-        "CCSV005", "Null dur_ms", "dur_ms is NULL.", "warning", "stats",
-    ),
-    "stats:null:transcript": RuleSpec(
-        "CCSV006", "Null or empty transcript",
-        "transcript is NULL or empty after canonicalization.", "warning",
-        "stats",
-    ),
-    "stats:domain:sr_hz": RuleSpec(
-        "CCSV007", "Sample rate outside allowed set",
-        "sr_hz is not one of the allowed sample rates.", "error", "stats",
-    ),
-    "audio:silence": RuleSpec(
-        "CCSV016", "Silent audio",
-        "Decoded PCM is effectively silent (RMS below floor).", "warning",
-        "audio",
-    ),
-    "audio:clipping": RuleSpec(
-        "CCSV017", "Clipped audio",
-        "Decoded PCM clips (peak-saturation ratio above ceiling).",
-        "warning", "audio",
-    ),
-    "stats:range:dur_ms": RuleSpec(
-        "CCSV018", "dur_ms out of range",
-        "dur_ms is outside the configured validity range.", "error",
-        "stats",
-    ),
-    "stats:domain:codec": RuleSpec(
-        "CCSV019", "Codec outside allowed set",
-        "codec is not one of the allowed codec names.", "error", "stats",
-    ),
-    "ref:fixture_missing": RuleSpec(
-        "CCSV008", "Missing reference fixture",
-        "No fixture row exists for this clip_id (referential anti-join).",
-        "warning", "referential",
-    ),
-    "uniq:clip_id": RuleSpec(
-        "CCSV009", "Duplicate clip_id",
-        "clip_id occurs more than once across the table (exact global "
-        "uniqueness).", "error", "uniqueness",
-    ),
-    "drift:psi:dur_ms": RuleSpec(
-        "CCSV010", "dur_ms PSI drift",
-        "Population Stability Index of the dur_ms histogram vs the "
-        "baseline snapshot exceeds the gate.", "warning", "drift",
-    ),
-    "drift:ks:dur_ms": RuleSpec(
-        "CCSV011", "dur_ms KS drift",
-        "KS statistic of the dur_ms histogram vs baseline exceeds the "
-        "gate.", "warning", "drift",
-    ),
-    "drift:psi:sr_hz": RuleSpec(
-        "CCSV012", "sr_hz PSI drift",
-        "PSI of the sr_hz distribution vs baseline exceeds the gate.",
-        "warning", "drift",
-    ),
-    "drift:quantile:dur_ms": RuleSpec(
-        "CCSV013", "dur_ms quantile drift",
-        "Relative delta of p50/p95/p99 vs baseline exceeds the gate.",
-        "warning", "drift",
-    ),
-    "drift:quantile:rms": RuleSpec(
-        "CCSV020", "rms quantile drift",
-        "Relative delta of decoded-PCM RMS p50/p95/p99 vs baseline exceeds "
-        "the gate.", "warning", "drift",
-    ),
-    "drift:quantile:spectral_flatness": RuleSpec(
-        "CCSV021", "spectral flatness quantile drift",
-        "Relative delta of decoded-PCM spectral-flatness p50/p95/p99 vs "
-        "baseline exceeds the gate.", "warning", "drift",
-    ),
-    "neardup:transcript": RuleSpec(
-        "CCSV022", "New near-dup transcript cluster",
-        "A transitive near-duplicate transcript cluster (LSH + exact-"
-        "Jaccard verified) whose '<min_id>|<size>' key is not in the "
-        "baseline's accepted clones section.", "warning", "uniqueness",
-    ),
-    "schema:removed": RuleSpec(
-        "CCSV014", "Schema column removed",
-        "A column present in the baseline schema is gone (breaking).",
-        "error", "schema",
-    ),
-    "schema:type_change": RuleSpec(
-        "CCSV015", "Schema column type changed",
-        "A column's type differs from the baseline schema (breaking).",
-        "error", "schema",
-    ),
-}
-
-_FALLBACK = RuleSpec(
-    "CCSV999", "Unmapped validation rule",
-    "Violation of a rule without a stable SARIF id mapping.", "warning",
-    "other",
-)
-
-
-def rule_spec(rule_id: str) -> RuleSpec:
-    return RULE_SPECS.get(rule_id, _FALLBACK)
+def _level(severity: str) -> str:
+    """SARIF level of a rule severity: ``error`` stays, ``warn`` -> ``warning``."""
+    return "error" if severity == "error" else "warning"
 
 
 def _iter_violation_rows(violations_path: str) -> Iterator[dict[str, Any]]:
@@ -195,7 +69,7 @@ def render_sarif(
     """SARIF 2.1.0 document: driver tool metadata + one rule entry per
     mapped rule + one result per violation exemplar row (when the parquet
     sink is supplied) plus one result per failed gate."""
-    used: dict[str, RuleSpec] = {}
+    used: dict[str, Rule] = {}
     results: list[dict[str, Any]] = []
     # derived.review_queue -> SARIF result `rank` (0..100, higher = triage
     # first): results in a ranked (partition, rule) cell carry the cell's
@@ -209,7 +83,7 @@ def render_sarif(
     }
 
     def _result(rule_id: str, message: str, partition: str,
-                clip_id: str | None, kind_level: str | None = None) -> None:
+                clip_id: str | None, level: str) -> None:
         spec = rule_spec(rule_id)
         used.setdefault(rule_id, spec)
         logical = [{"name": partition, "kind": "partition"}]
@@ -219,7 +93,7 @@ def render_sarif(
         results.append(
             {
                 "ruleId": spec.sarif_id,
-                "level": kind_level or spec.level,
+                "level": level,
                 "message": {"text": message},
                 "locations": [{"logicalLocations": logical}],
                 **({"rank": rank} if rank is not None else {}),
@@ -230,14 +104,13 @@ def render_sarif(
 
     if violations_path:
         for row in _iter_violation_rows(violations_path):
-            sev = row.get("severity") or "error"
             _result(
                 row["rule_id"],
                 f"{row['rule_id']}: observed={row.get('observed')} "
                 f"expected={row.get('expected')}",
-                row.get("partition") or "<table>",
+                row.get("partition") or TABLE_SCOPE,
                 row.get("clip_id"),
-                "error" if sev == "error" else "warning",
+                _level(row.get("severity") or "error"),
             )
     for g in report.get("findings", {}).get("failed_gates", []):
         _result(g["rule_id"], g["reason"], g["partition"], None, "error")
@@ -248,7 +121,7 @@ def render_sarif(
             "name": rid.replace(":", "_"),
             "shortDescription": {"text": spec.short},
             "fullDescription": {"text": spec.full},
-            "defaultConfiguration": {"level": spec.level},
+            "defaultConfiguration": {"level": _level(spec.severity)},
             "properties": {"family": spec.family, "engine_rule_id": rid},
         }
         for rid, spec in sorted(used.items(), key=lambda kv: kv[1].sarif_id)
@@ -308,7 +181,9 @@ def render_markdown(report: dict[str, Any]) -> str:
     by_rule = fnd.get("by_rule", {})
     for rid in sorted(by_rule):
         spec = rule_spec(rid)
-        lines.append(f"| {rid} | {spec.sarif_id} | {by_rule[rid]} | {spec.level} |")
+        lines.append(
+            f"| {rid} | {spec.sarif_id} | {by_rule[rid]} | {_level(spec.severity)} |"
+        )
     failed = fnd.get("failed_gates", [])
     lines += ["", f"## Failed gates ({len(failed)})", ""]
     if failed:

@@ -23,9 +23,8 @@ import os
 from typing import Any, Iterator
 from urllib.parse import quote
 
+from codeclone_spark.operators.rules import TABLE_SCOPE
 from codeclone_spark.plans.render import _iter_violation_rows
-
-TABLE_SCOPE = "<table>"
 
 
 def _sink_rows(path: str, rule: str | None = None) -> Iterator[dict[str, Any]]:

@@ -44,19 +44,22 @@ from codeclone_spark import (
 )
 from codeclone_spark.operators.rules import (
     ALLOWED_SR,
+    CROSS_PARTITION_SCOPES,
     DRIFT_RULE_IDS,
     DUR_BIN_EDGES,
     NEARDUP_RULE_ID,
     NUMERIC_STATS_COLUMNS,
     RULE_SEVERITY,
+    RULES,
     SCHEMA_RULE_IDS,
-    TABLE_RULE_IDS,
+    TABLE_SCOPE,
     GateConfig,
     build_verdicts,
     evaluate_row_rules,
     evaluate_uniqueness,
     partition_aggregates,
     qsketch_counts_multi,
+    rule_spec,
     violation_key,
 )
 from codeclone_spark.operators.schema_diff import canonical_schema, schema_diff
@@ -76,52 +79,9 @@ from codeclone_spark.plans.ledger import (
 )
 from codeclone_spark.sources import validate_clips_schema, validate_data_dir
 
-TABLE_SCOPE = "<table>"
-
 # Ranked triage queue length (reference hotlist caps, report/suggestions.py)
 REVIEW_QUEUE_K = 10
 _SEV_WEIGHT = {"error": 3, "warn": 1}
-
-# Remediation hints per rule (reference report/suggestions.py maps finding
-# kinds to suggested actions the same way); keyed by exact rule_id with a
-# family fallback.  Deterministic strings — they land in the canonical
-# report and its golden snapshots.
-_RULE_ACTIONS = {
-    "audio:undecodable": "re-encode or quarantine the payloads; audit the "
-                         "ingest codec pipeline for this partition",
-    "audio:snr": "re-master from source or refresh the reference fixture "
-                 "PCM for these clips",
-    "audio:len_consistency": "recompute header dur_ms/sr_hz from the "
-                             "decoded stream at ingest",
-    "audio:transcript_eq": "re-run transcription or update fixtures if "
-                           "the new transcripts are authoritative",
-    "audio:silence": "review capture gain staging; drop or re-record "
-                     "silent clips",
-    "audio:clipping": "review capture gain staging; re-normalize clipped "
-                      "clips",
-    "ref:fixture_missing": "regenerate reference fixtures for this "
-                           "partition (or gate ingest on fixture delivery)",
-    "uniq:clip_id": "deduplicate at ingest; add a clip_id uniqueness "
-                    "constraint upstream",
-    "neardup:transcript": "review the new clone groups; purge via the "
-                          "dedup keep-list manifest or accept them with "
-                          "--update-baseline",
-    "stats:null:dur_ms": "backfill dur_ms upstream or drop rows at ingest",
-    "stats:null:transcript": "backfill transcripts upstream or route to "
-                             "the transcription queue",
-    "stats:range:dur_ms": "clamp or quarantine out-of-range durations at "
-                          "ingest",
-    "stats:domain:sr_hz": "resample to an allowed rate or extend the "
-                          "allowed set deliberately",
-    "stats:domain:codec": "transcode to an allowed codec or extend the "
-                          "allowed set deliberately",
-}
-
-
-def _suggested_action(rule_id: str) -> str:
-    return _RULE_ACTIONS.get(
-        rule_id, "inspect exemplar violations and file a data-quality issue"
-    )
 
 
 @dataclass
@@ -487,7 +447,7 @@ def _parse_suppressions(suppressions: list[str]) -> list[tuple[str, str]]:
         # uniq:clip_id (and near-dup clusters) are attributed to
         # min(part) for reporting only, so "rule:<part>" would suppress
         # groups spanning OTHER partitions.  Only '*' may suppress them.
-        if part != "*" and rid in (TABLE_RULE_IDS + [NEARDUP_RULE_ID]):
+        if part != "*" and rule_spec(rid).scope in CROSS_PARTITION_SCOPES:
             raise ValueError(
                 f"suppression {rid}:{part}: table-scope rules accept "
                 "only the '*' partition"
@@ -1086,7 +1046,7 @@ def _review_queue(counts: DataFrame) -> list[dict[str, Any]]:
             "n_new": int(r["n_new"]),
             "severity": RULE_SEVERITY.get(r["rule_id"], "error"),
             "score": int(r["score"]),
-            "action": _suggested_action(r["rule_id"]),
+            "action": rule_spec(r["rule_id"]).action,
         }
         for r in rq_rows
     ]
@@ -1166,9 +1126,9 @@ def _findings(
             "rule_counts", {}
         ).items():
             rule_counts[rid] = rule_counts.get(rid, 0) + int(nv)
-    for rid in ("uniq:clip_id", NEARDUP_RULE_ID):
-        if rid in exemplar_counts:
-            rule_counts[rid] = exemplar_counts[rid]
+    for r in RULES:
+        if r.scope in CROSS_PARTITION_SCOPES and r.rule_id in exemplar_counts:
+            rule_counts[r.rule_id] = exemplar_counts[r.rule_id]
     by_severity: dict[str, int] = {}
     for rid, n in rule_counts.items():
         sev = RULE_SEVERITY.get(rid, "error")

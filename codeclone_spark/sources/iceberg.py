@@ -46,14 +46,6 @@ def read_table(spark: SparkSession, identifier: str) -> DataFrame:
     return spark.read.parquet(identifier)
 
 
-def list_partitions(spark: SparkSession, identifier: str) -> list[str]:
-    """Partition values via Iceberg metadata table (no data scan)."""
-    if iceberg_available(spark):
-        rows = spark.sql(f"SELECT partition FROM {identifier}.partitions").collect()
-        return sorted(str(r["partition"]) for r in rows)
-    raise ValueError("not an Iceberg session; use directory discovery")
-
-
 def current_snapshot_id(spark: SparkSession, identifier: str) -> int | None:
     """Snapshot id of the table's CURRENT state.
 

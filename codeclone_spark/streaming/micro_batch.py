@@ -24,6 +24,21 @@ from codeclone_spark.plans.facts import (
 from codeclone_spark.schema import CLIPS_SCHEMA
 
 
+def batch_sink(out_dir: str):
+    """foreachBatch sink factory.  foreachBatch is at-least-once, so a
+    retried batch is reprocessed under the SAME batch_id: each micro-batch
+    writes its own batch_id=<id> partition dir with overwrite, which makes
+    the retry a no-op instead of an append-duplication (the reader
+    recovers batch_id via partition discovery)."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={int(batch_id)}")
+        )
+
+    return sink
+
+
 def stream_validate(
     spark: SparkSession,
     clips_stream_dir: str,
@@ -45,17 +60,12 @@ def stream_validate(
         .parquet(clips_stream_dir)
     )
 
+    sink = batch_sink(out_dir)
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         facts, decoded = build_facts(batch_df, fixtures_meta, fixtures_pcm)
-        # Idempotent sink: foreachBatch is at-least-once, so a retried batch
-        # is reprocessed under the SAME batch_id — writing each batch to its
-        # own batch_id=<id> partition dir with overwrite makes the retry a
-        # no-op instead of an append-duplication (the reader recovers
-        # batch_id via partition discovery).
         try:
-            evaluate_row_rules(facts).write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={int(batch_id)}")
-            )
+            sink(evaluate_row_rules(facts), batch_id)
         finally:
             decoded.unpersist()
 
@@ -99,6 +109,8 @@ def stream_drift_monitor(
         .parquet(clips_stream_dir)
     )
 
+    sink = batch_sink(out_dir)
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         row = batch_df.agg(
             _hist_expr("dur_ms", DUR_BIN_EDGES).alias("h"),
@@ -117,12 +129,7 @@ def stream_drift_monitor(
             ],
             "rows long, rule_id string, psi double, pass boolean",
         )
-        # idempotent per-batch partition sink (see stream_validate): a
-        # foreachBatch retry overwrites its own batch_id dir, never appends
-        # duplicate verdict rows
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={int(batch_id)}")
-        )
+        sink(out, batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

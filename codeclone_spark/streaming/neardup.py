@@ -38,7 +38,6 @@ an anchor in several bands emits several rows — consumers dedupe on
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterator
 
 import pandas as pd
@@ -53,6 +52,7 @@ from codeclone_spark.operators.dedup import (
     SHINGLE_K,
     mh_constants,
 )
+from codeclone_spark.streaming.micro_batch import batch_sink
 
 NEARDUP_OUT_SCHEMA = (
     "band int, bucket_key string, id string, anchor_id string, nth long"
@@ -170,21 +170,6 @@ def stream_neardup_candidates(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def batch_sink(out_dir: str):
-    """foreachBatch sink factory: each micro-batch writes its own
-    batch_id=<id> partition dir with overwrite, so an at-least-once
-    retry of the SAME batch replaces its own output instead of
-    append-duplicating it (reader recovers batch_id via partition
-    discovery; same pattern as micro_batch.py's sinks)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={int(batch_id)}")
-        )
-
-    return sink
 
 
 def run_stream_neardup(

@@ -12,12 +12,13 @@ checkpointed by the streaming engine; memory per key is one long.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from codeclone_spark.streaming.micro_batch import batch_sink
 
 DEDUP_OUT_SCHEMA = (
     "clip_id string, n_batch long, seen_before long, is_duplicate boolean"
@@ -54,21 +55,6 @@ def stream_dedup_first_seen(ids_stream: DataFrame) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def batch_sink(out_dir: str):
-    """foreachBatch sink factory: each micro-batch writes its own
-    batch_id=<id> partition dir with overwrite, so an at-least-once
-    retry of the SAME batch replaces its own output instead of
-    append-duplicating it (reader recovers batch_id via partition
-    discovery; same pattern as micro_batch.py's sinks)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={int(batch_id)}")
-        )
-
-    return sink
 
 
 def run_stream_dedup(

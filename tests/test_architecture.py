@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 import codeclone_spark
 
@@ -88,4 +89,35 @@ def test_surfaces_not_imported_internally():
             for mod in _imports_of(os.path.join(root, fn)):
                 if _first_component(mod) in SURFACES:
                     violations.append(f"{rel} imports {mod}")
+    assert not violations, "\n".join(violations)
+
+
+RULE_KEY = re.compile(r"^(audio|stats|ref|uniq|neardup|drift|schema):")
+REGISTRY = os.path.join("operators", "rules.py")
+
+
+def test_rule_metadata_lives_only_in_the_registry():
+    """A dict literal keyed by rule ids outside ``operators/rules.py`` is a
+    second, hand-synced rule table: per-rule metadata belongs on the
+    ``RULES`` record, and lookups derive from it."""
+    violations = []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fn in sorted(files):
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG_ROOT)
+            if not fn.endswith(".py") or rel == REGISTRY:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Dict):
+                    continue
+                keys = [
+                    k.value
+                    for k in node.keys
+                    if isinstance(k, ast.Constant) and isinstance(k.value, str)
+                ]
+                hits = [k for k in keys if RULE_KEY.match(k)]
+                if hits:
+                    violations.append(f"{rel}:{node.lineno} keys {hits[:3]}")
     assert not violations, "\n".join(violations)

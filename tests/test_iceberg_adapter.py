@@ -3,8 +3,6 @@ sandbox case) — the engine stays source-agnostic either way."""
 
 from __future__ import annotations
 
-import pytest
-
 from codeclone_spark.sources import iceberg as ib
 
 
@@ -17,11 +15,6 @@ def test_read_table_parquet_fallback(spark, tmp_path):
     p = str(tmp_path / "t.parquet")
     spark.range(5).write.parquet(p)
     assert ib.read_table(spark, p).count() == 5
-
-
-def test_list_partitions_requires_catalog(spark):
-    with pytest.raises(ValueError, match="not an Iceberg session"):
-        ib.list_partitions(spark, "db.tbl")
 
 
 def test_snapshot_id_none_without_catalog(spark):

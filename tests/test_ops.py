@@ -46,11 +46,6 @@ def test_minhash_identical_docs_same_signature(docs):
     assert sigs[1] != sigs[4]
 
 
-def test_minhash_groups(docs):
-    g = dd.minhash_signature_groups(docs, "doc_id", "text").collect()
-    assert any(r["n"] >= 2 and r["min_id"] == 1 for r in g)
-
-
 def test_lsh_recall_of_exact_dups(docs):
     pairs = {(r["id_a"], r["id_b"]) for r in dd.lsh_candidate_pairs(docs, "doc_id", "text").collect()}
     assert (1, 2) in pairs  # identical docs always collide

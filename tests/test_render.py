@@ -7,20 +7,14 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
-from codeclone_spark.operators.rules import (
-    DRIFT_RULE_IDS,
-    ROW_RULE_IDS,
-    SCHEMA_RULE_IDS,
-    TABLE_RULE_IDS,
-)
+from codeclone_spark.operators.rules import RULE_SEVERITY, RULES, rule_spec
 from codeclone_spark.plans.render import (
-    RULE_SPECS,
     render_markdown,
     render_outputs,
     render_sarif,
-    rule_spec,
 )
 
 GOLDEN_SARIF = os.path.join(
@@ -30,18 +24,50 @@ GOLDEN_SARIF = os.path.join(
 
 def test_every_engine_rule_has_a_stable_sarif_id():
     # EVERY rule that can appear in a verdict or violation row must map to
-    # a stable external id — row, table, drift AND schema rules (a failed
-    # drift gate rendering as the CCSV999 fallback would break the external
-    # rule-id contract).
-    all_rules = ROW_RULE_IDS + TABLE_RULE_IDS + DRIFT_RULE_IDS + SCHEMA_RULE_IDS
-    missing = [r for r in all_rules if r not in RULE_SPECS]
-    assert not missing, f"rules without a RuleSpec: {missing}"
-    ids = [RULE_SPECS[r].sarif_id for r in all_rules]
+    # a stable external id — row, table, near-dup, drift AND schema rules
+    # (a failed drift gate rendering as the CCSV999 fallback would break
+    # the external rule-id contract).
+    assert {r.scope for r in RULES} == {"row", "table", "neardup", "drift", "schema"}
+    missing = [r.rule_id for r in RULES if rule_spec(r.rule_id) is not r]
+    assert not missing, f"rules without a registry record: {missing}"
+    ids = [r.sarif_id for r in RULES]
     assert len(ids) == len(set(ids))  # no duplicates
+    assert len(RULES) == len({r.rule_id for r in RULES})
     assert all(i.startswith("CCSV") for i in ids)
     # fallback never collides with a mapped id
     assert rule_spec("no:such:rule").sarif_id == "CCSV999"
     assert "CCSV999" not in ids
+
+
+def test_rendered_levels_follow_report_severity(tiny_run):
+    """The SARIF rule level and the markdown severity column agree with the
+    canonical report: for every rule in ``findings.by_rule`` both equal the
+    level derived from the rule's report severity (error -> error,
+    warn -> warning)."""
+    out_dir = os.path.dirname(tiny_run.violations_path)
+    md_path, sarif_path = render_outputs(out_dir, ["md", "sarif"])
+    md_levels = {}
+    for line in open(md_path).read().splitlines():
+        cells = [c.strip() for c in line.strip("|").split("|")]
+        if len(cells) == 4 and cells[1].startswith("CCSV"):
+            md_levels[cells[0]] = cells[3]
+    sarif_levels = {
+        r["properties"]["engine_rule_id"]: r["defaultConfiguration"]["level"]
+        for r in json.load(open(sarif_path))["runs"][0]["tool"]["driver"]["rules"]
+    }
+    # severities as the report's own rows carry them: exemplar violation
+    # rows and the review queue
+    rows = pq.read_table(tiny_run.violations_path, columns=["rule_id", "severity"])
+    report_sev = {row["rule_id"]: row["severity"] for row in rows.to_pylist()}
+    for q in tiny_run.report["derived"]["review_queue"]:
+        report_sev[q["rule_id"]] = q["severity"]
+    by_rule = tiny_run.report["findings"]["by_rule"]
+    assert "ref:fixture_missing" in by_rule  # the rule the tables disagreed on
+    for rid in by_rule:
+        sev = report_sev.get(rid, RULE_SEVERITY[rid])
+        want = "error" if sev == "error" else "warning"
+        assert sarif_levels[rid] == want, rid
+        assert md_levels[rid] == want, rid
 
 
 def test_render_outputs_golden(tiny_run, tmp_path):

@@ -253,17 +253,17 @@ def test_stream_neardup_candidates_cross_batch(spark, tmp_path):
 
 def test_stateful_sinks_retry_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: replaying the SAME batch_id through
-    each stateful sink must leave the sink contents identical (the old
-    append-mode sinks double-counted replays)."""
-    from codeclone_spark.streaming import neardup as nd
-    from codeclone_spark.streaming import stateful as st
+    the one streaming sink must leave the sink contents identical for both
+    stateful row shapes (the old append-mode sinks double-counted
+    replays)."""
+    from codeclone_spark.streaming.micro_batch import batch_sink
 
     dd_rows = spark.createDataFrame(
         [("a", 1, 0, False), ("b", 2, 1, True)],
         "clip_id string, n_batch long, seen_before long, is_duplicate boolean",
     )
     out1 = str(tmp_path / "dedup_out")
-    sink1 = st.batch_sink(out1)
+    sink1 = batch_sink(out1)
     sink1(dd_rows, 3)
     first = sorted(map(tuple, spark.read.parquet(out1).collect()))
     sink1(dd_rows, 3)  # simulate the at-least-once replay
@@ -274,7 +274,7 @@ def test_stateful_sinks_retry_idempotent(spark, tmp_path):
         "band int, bucket_key string, id string, anchor_id string, nth long",
     )
     out2 = str(tmp_path / "nd_out")
-    sink2 = nd.batch_sink(out2)
+    sink2 = batch_sink(out2)
     sink2(nd_rows, 5)
     first2 = sorted(map(tuple, spark.read.parquet(out2).collect()))
     sink2(nd_rows, 5)
