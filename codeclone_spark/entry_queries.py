@@ -24,6 +24,7 @@ from codeclone_spark.operators import dedup as dd
 from codeclone_spark.operators import similarity as sim
 from codeclone_spark.operators import text as tx
 from codeclone_spark.operators.rules import DUR_BIN_EDGES
+from codeclone_spark.schema import local_frame
 
 CLIPS_BASE = "/root/repo/testclips"
 SF_PROFILE = {"0.001": "tiny", "0.01": "small", "0.1": "bench"}
@@ -1216,7 +1217,8 @@ def sim_ivf_assign(spark: SparkSession, sf: str) -> DataFrame:
     """IVF coarse assignment: nearest of C broadcast seed centroids."""
     e = _t(spark, sf, "embeddings")
     rows = e.orderBy("vec_id").limit(_IVF_C).collect()
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(i, [float(x) for x in r["embedding"]]) for i, r in enumerate(rows)],
         "cid BIGINT, cvec ARRAY<DOUBLE>",
     )
@@ -1321,7 +1323,7 @@ def stream_dedup_updates(spark: SparkSession, sf: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
     # tiny (<=2 rows): re-materialize so the returned frame outlives the
     # scratch dir cleanup
-    return spark.createDataFrame(rows, "is_duplicate boolean, n long")
+    return local_frame(spark, rows, "is_duplicate boolean, n long")
 
 
 def stream_neardup_updates(spark: SparkSession, sf: str) -> DataFrame:
@@ -1383,7 +1385,8 @@ def stream_neardup_updates(spark: SparkSession, sf: str) -> DataFrame:
         ).collect()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         row,
         "n_candidate_rows long, n_flagged_docs long, "
         "n_anchors long, n_hot_buckets long",

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from codeclone_spark.functions.audio import DUR_TOLERANCE_MS, SNR_MIN_DB
+from codeclone_spark.schema import local_frame
 
 ALLOWED_SR = [8000, 16000, 22050, 44100, 48000]
 ALLOWED_CODECS = ["pcm_s16le", "flac", "mp3", "vorbis"]
@@ -602,7 +603,7 @@ def build_verdicts(
     run: their verdicts pass with an informational reason."""
     spark = violation_counts.sparkSession
     all_rules = ROW_RULE_IDS + TABLE_RULE_IDS
-    rules_df = spark.createDataFrame([(r,) for r in all_rules], ["rule_id"])
+    rules_df = local_frame(spark, [(r,) for r in all_rules], "rule_id string")
     grid = partition_rows.select(
         F.col("part").alias("partition"), "rows"
     ).crossJoin(F.broadcast(rules_df))

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from codeclone_spark.schema import local_frame
+
 # Spark simpleString dtype -> engine-canonical type name (DuckDB's names, so
 # the DuckDB oracle can DESCRIBE the same parquet and agree byte-for-byte).
 CANONICAL_TYPES = {
@@ -71,7 +73,8 @@ def schema_diff_rows(
         + [(c, "type_changed", bt, ct) for c, bt, ct in d["type_changed"]]
         + [(c, "added", None, current[c]) for c in d["added"]]
     )
-    return spark.createDataFrame(
-        rows or [],
+    return local_frame(
+        spark,
+        rows,
         "col_name STRING, status STRING, expected_type STRING, current_type STRING",
     )

@@ -22,6 +22,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from codeclone_spark.schema import local_frame
+
 N_PLANES = 12
 
 
@@ -156,7 +158,8 @@ def ann_topk_ivf(
         range(len(centroids)), key=lambda i: (cos_lists(query, centroids[i]), -i)
     )
     spark = df.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cid BIGINT, cvec ARRAY<DOUBLE>",
     )

@@ -77,6 +77,7 @@ from codeclone_spark.plans.ledger import (
     merge_partials,
     partition_data_signature,
 )
+from codeclone_spark.schema import local_frame
 from codeclone_spark.sources import validate_clips_schema, validate_data_dir
 
 # Ranked triage queue length (reference hotlist caps, report/suggestions.py)
@@ -298,8 +299,8 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     # Persisted: the report phase runs three independent actions over this
     # frame (review-queue top-k, violations write, verdicts write) and each
     # would otherwise re-scan the full corpus ids and redo the dup groupBy;
-    # the frame itself is tiny (dup exemplars only).  Unpersisted after the
-    # final writes.
+    # the frame itself is tiny (dup exemplars only).  Unpersisted after its
+    # last consumer, the baseline update.
     uniq_viol = evaluate_uniqueness(ids_only).persist()
 
     neardup_clusters = neardup_viol = None
@@ -337,9 +338,10 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     _mark("uniqueness_and_ndv")
 
     # --- verdicts: the dense grid, then one row per table-scope rule
-    part_rows = spark.createDataFrame(
+    part_rows = local_frame(
+        spark,
         [(p, int(ledger.partitions.get(p, {}).get("rows", 0))) for p in all_parts],
-        ["part", "rows"],
+        "part string, rows long",
     )
     lane_parts: set[str] = set()
     if cfg.test_lane_pattern:
@@ -357,14 +359,15 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     table_rows = drift_rows + schema_rows
     if cfg.neardup_transcript:
         table_rows.append(_neardup_verdict(cfg.gates, neardup_metrics, directives))
-    verdicts = verdicts.unionByName(spark.createDataFrame(
-        table_rows, ["partition", "rule_id", "pass", "reason", "novelty"]
+    verdicts = verdicts.unionByName(local_frame(
+        spark, table_rows,
+        "`partition` string, rule_id string, pass boolean, reason string, "
+        "novelty string",
     ))
     review_queue = _review_queue(counts)
 
     # --- canonical, deterministically-ordered outputs
     violations_path, verdicts_path = _write_sinks(cfg, all_viol, verdicts)
-    uniq_viol.unpersist()
     counts.unpersist()
     _mark("final_writes")
 
@@ -428,8 +431,10 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         _update_baseline(
             cfg, all_viol, snapshot, neardup_clusters, current_schema, metrics
         )
-        return RunResult(EXIT_OK, report, violations_path, verdicts_path)
-    exit_code = EXIT_GATE_FAILURE if failed else EXIT_OK
+        exit_code = EXIT_OK
+    else:
+        exit_code = EXIT_GATE_FAILURE if failed else EXIT_OK
+    uniq_viol.unpersist()
     return RunResult(exit_code, report, violations_path, verdicts_path)
 
 
@@ -501,8 +506,8 @@ def _accepted_keys(
 
     It joins once per wave to split true violation counts into known/new
     BEFORE the exemplar cap, so gate arithmetic never sees truncated counts
-    (``_gate_counts`` reuses it).  Inline sets are a driver-literal
-    broadcast; sidecar sets (large debt) are a parquet scan joined
+    (``_gate_counts`` reuses it).  Inline sets are a broadcast
+    local relation; sidecar sets (large debt) are a parquet scan joined
     distributively — the keys never materialize on the driver."""
     if accepted_ref:
         base_dir = os.path.dirname(cfg.baseline_path) or "."
@@ -512,8 +517,8 @@ def _accepted_keys(
             .withColumn("accepted", F.lit(True))
         )
     return F.broadcast(
-        spark.createDataFrame(
-            [(k,) for k in accepted] or [("\x00never",)], ["vkey"]
+        local_frame(
+            spark, [(k,) for k in accepted] or [("\x00never",)], "vkey string"
         ).withColumn("accepted", F.lit(True))
     )
 
@@ -758,8 +763,10 @@ def _neardup_stage(
         ledger.record(nd_key, {"neardup_sig": nd_sig})
         ledger.save("neardup")
     acc_ck = F.broadcast(
-        spark.createDataFrame(
-            [(k,) for k in sorted(accepted_clones)] or [("\x00never",)], ["ckey"]
+        local_frame(
+            spark,
+            [(k,) for k in sorted(accepted_clones)] or [("\x00never",)],
+            "ckey string",
         ).withColumn("known", F.lit(True))
     )
     # every consumer (summary agg, violation sink, baseline keys) reads the
@@ -844,7 +851,7 @@ def _gate_counts(
     ]
     counts_schema = "`partition` string, rule_id string, n_viol long, n_new long"
     counts = uniq_counts.unionByName(
-        spark.createDataFrame(row_count_tuples, counts_schema)
+        local_frame(spark, row_count_tuples, counts_schema)
     )
     if neardup_metrics:
         # joins the counts frame so suppression directives and the review
@@ -857,7 +864,7 @@ def _gate_counts(
             neardup_metrics["n_clusters"],
             neardup_metrics["n_new"],
         )
-        counts = counts.unionByName(spark.createDataFrame([nd_row], counts_schema))
+        counts = counts.unionByName(local_frame(spark, [nd_row], counts_schema))
 
     # suppression directives: zero n_new for matching (rule, partition)
     # pairs (gate-level allowlist; the violation rows stay in the output)
@@ -1214,15 +1221,20 @@ def _update_baseline(
     distinct_keys = (
         novkey.withColumn("vkey", violation_key(novkey)).select("vkey").distinct()
     )
-    n_keys = distinct_keys.count()
-    if n_keys > cfg.accepted_inline_max:
+    # one bounded action decides inline vs sidecar: at most
+    # accepted_inline_max + 1 keys ever reach the driver
+    all_keys = [
+        r["vkey"]
+        for r in distinct_keys.orderBy("vkey")
+        .limit(cfg.accepted_inline_max + 1)
+        .collect()
+    ]
+    ref = None
+    if len(all_keys) > cfg.accepted_inline_max:
         # large debt set: sorted parquet side table, written and
         # digest-folded entirely executor-side (never O(keys) driver)
         ref = bl.write_accepted_sidecar(distinct_keys, cfg.baseline_path)
-        all_keys: list[str] = []
-    else:
-        ref = None
-        all_keys = [r["vkey"] for r in distinct_keys.orderBy("vkey").collect()]
+        all_keys = []
     # clones section: replace this run's family when the stage ran, CARRY
     # FORWARD families from the prior snapshot otherwise — an update run
     # with the stage disabled must not silently un-accept previously

@@ -21,7 +21,7 @@ from codeclone_spark.plans.facts import (
     read_fixtures_meta,
     read_fixtures_pcm,
 )
-from codeclone_spark.schema import CLIPS_SCHEMA
+from codeclone_spark.schema import CLIPS_SCHEMA, local_frame
 
 
 def batch_sink(out_dir: str):
@@ -118,7 +118,8 @@ def stream_drift_monitor(
         ).collect()[0]
         hist = [int(x) for x in row["h"]]
         psi = bl.psi(b_hist, hist)
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [
                 (
                     int(row["rows"]),

@@ -121,3 +121,32 @@ def test_rule_metadata_lives_only_in_the_registry():
                 if hits:
                     violations.append(f"{rel}:{node.lineno} keys {hits[:3]}")
     assert not violations, "\n".join(violations)
+
+
+def test_driver_rows_enter_spark_only_through_local_frame():
+    """``createDataFrame`` over a driver list plans as ``Scan ExistingRDD``
+    and re-runs the rows through Python workers on every action; driver
+    rows go through ``schema.local_frame``, which is the one call site."""
+    violations = []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fn in sorted(files):
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG_ROOT)
+            if not fn.endswith(".py"):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            allowed: set[int] = set()
+            if rel == "schema.py":
+                for node in ast.walk(tree):
+                    if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                        allowed |= {id(n) for n in ast.walk(node)}
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                    and id(node) not in allowed
+                ):
+                    violations.append(f"{rel}:{node.lineno}")
+    assert not violations, "\n".join(violations)

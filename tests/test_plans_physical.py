@@ -4,6 +4,8 @@ broadcast-vs-SMJ join choice, and single-scan (shuffle-free) rule evaluation."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from codeclone_spark.operators.rules import evaluate_row_rules
@@ -216,3 +218,81 @@ def test_text_queries_prune_document_columns(spark):
     plan = sigs._jdf.queryExecution().executedPlan().toString()
     scan = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert scan and "ReadSchema: struct<doc_id:bigint,text:string>" in scan[0], scan
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """``schema.local_frame`` returns what ``createDataFrame(rows, schema)``
+    returns, but plans as a JVM-held local relation: no Python-worker
+    ``Scan ExistingRDD`` under any action."""
+    from codeclone_spark.schema import local_frame
+
+    ddl = "s string, n long, b boolean, ns string, v array<double>"
+    rows = [
+        ("a", 1, True, None, [1.0, 2.5]),
+        ("b", 2**40, False, "x", []),
+        ("c", -3, None, None, None),
+    ]
+    for data in (rows, []):
+        got, want = local_frame(spark, data, ddl), spark.createDataFrame(data, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        body = _plan(got, "simple").split("== Physical Plan ==")[-1]
+        assert "LocalTableScan" in body
+        assert "ExistingRDD" not in body
+
+
+def test_runner_driver_frames_are_local_relations(spark, tiny_dir, tiny_run):
+    """The run's driver-built frames (inline accepted keys, the verdict
+    grid's rule list, the ledger-count tuples) are local relations: an
+    ``ExistingRDD`` leaf would pickle them through Python workers on every
+    action that reads them."""
+    from codeclone_spark.operators.rules import (
+        GateConfig,
+        build_verdicts,
+        evaluate_uniqueness,
+    )
+    from codeclone_spark.plans.ledger import Ledger
+    from codeclone_spark.plans.runner import RunConfig, _accepted_keys, _gate_counts
+
+    out_dir = os.path.dirname(tiny_run.violations_path)
+    cfg = RunConfig(data_dir=tiny_dir, out_dir=out_dir)
+    acc_df = _accepted_keys(spark, cfg, ["k0", "k1"], {})
+    ledger = Ledger(os.path.join(out_dir, "ledger"))
+    all_parts = sorted(ledger.partitions)
+    ids_only = read_clips(spark, tiny_dir).select("clip_id", "part")
+    counts, _ = _gate_counts(
+        spark, evaluate_uniqueness(ids_only), acc_df, ledger, all_parts,
+        {"n_clusters": 1, "n_new": 1}, [],
+    )
+    try:
+        part_rows = spark.range(len(all_parts)).select(
+            F.concat(F.lit("p"), F.col("id").cast("string")).alias("part"),
+            F.lit(1).cast("long").alias("rows"),
+        )
+        verdicts = build_verdicts(counts, part_rows, GateConfig())
+        for df in (acc_df, counts, verdicts):
+            body = _plan(df, "simple").split("== Physical Plan ==")[-1]
+            assert "ExistingRDD" not in body
+            assert "LocalTableScan" in body
+    finally:
+        counts.unpersist()
+
+
+def test_runs_leave_nothing_persisted(spark, tiny_dir, tmp_path):
+    """A gated run, a baseline update and a near-dup run each release every
+    frame they persist — including the uniqueness frame, whose last
+    consumer is the baseline update."""
+    from codeclone_spark.plans.runner import RunConfig, run
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    base = str(tmp_path / "baseline.json")
+    for name, kw in (
+        ("gated", {}),
+        ("update", {"baseline_path": base, "update_baseline": True}),
+        ("neardup", {"neardup_transcript": True}),
+    ):
+        run(spark, RunConfig(data_dir=tiny_dir, out_dir=str(tmp_path / name), **kw))
+        assert persisted() <= before, name
