@@ -30,7 +30,6 @@ def build_parser() -> argparse.ArgumentParser:
     r.add_argument("--update-baseline", action="store_true")
     r.add_argument("--no-gating", action="store_true")
     r.add_argument("--wave-size", type=int, default=None)
-    r.add_argument("--force-smj", action="store_true")
     r.add_argument("--max-count", action="append", default=[],
                    metavar="RULE=N", help="per-rule violation budget")
     r.add_argument("--test-lane-pattern", default=None, metavar="REGEX",
@@ -58,10 +57,6 @@ def build_parser() -> argparse.ArgumentParser:
                                      "for a verified near-dup pair")
     r.add_argument("--neardup-max-bucket", type=int, default=1024,
                    help="LSH bucket cap for the candidate stage")
-    r.add_argument("--neardup-prefilter-hot", action="store_true",
-                   help="drop over-cap LSH keys BEFORE the bucket "
-                        "aggregation (bounds aggregation buffers on "
-                        "adversarial corpora; identical output)")
     r.add_argument("--cores", type=int, default=None)
     r.add_argument("--render", default=None, metavar="FMT[,FMT]",
                    help="also render report.md / report.sarif / report.txt "
@@ -114,10 +109,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="exact-Jaccard verification threshold")
     k.add_argument("--max-bucket", type=int, default=1024,
                    help="LSH bucket cap (caps as backpressure)")
-    k.add_argument("--prefilter-hot", action="store_true",
-                   help="drop over-cap LSH keys BEFORE the bucket "
-                        "aggregation (bounds every aggregation buffer; "
-                        "second pass over the signature pipeline)")
     k.add_argument("--cores", type=int, default=None)
     return p
 
@@ -153,15 +144,12 @@ def main(argv: list[str] | None = None) -> int:
                     print(f"CONTRACT_ERROR: column {c!r} not in input",
                           file=sys.stderr)
                     return EXIT_CONTRACT_ERROR
-            # one scratch dir for the ladder (candidates + CC rounds):
-            # this is the scale entry point, so the upstream pipeline must
-            # compute exactly once (AQE exchange reuse is not a contract —
-            # see lsh_verified_pairs docstring)
+            # one scratch dir for the ladder (candidates + CC rounds)
             scratch = f"{args.out_dir.rstrip('/')}/scratch"
             pairs = lsh_verified_pairs(
                 df, args.id_col, args.text_col,
                 max_bucket=args.max_bucket, threshold=args.threshold,
-                prefilter_hot=args.prefilter_hot, scratch_dir=scratch,
+                scratch_dir=scratch,
             )
             manifest = keep_list(
                 df, args.id_col, connected_components(pairs, scratch_dir=scratch)
@@ -243,7 +231,6 @@ def main(argv: list[str] | None = None) -> int:
                 gating=not args.no_gating,
                 update_baseline=args.update_baseline,
                 wave_size=args.wave_size,
-                force_smj=args.force_smj,
                 test_lane_pattern=args.test_lane_pattern,
                 suppressions=list(args.suppress),
                 iceberg_table=args.iceberg_table,
@@ -251,7 +238,6 @@ def main(argv: list[str] | None = None) -> int:
                 neardup_transcript=args.neardup_transcript,
                 neardup_threshold=args.neardup_threshold,
                 neardup_max_bucket=args.neardup_max_bucket,
-                neardup_prefilter_hot=args.neardup_prefilter_hot,
                 gates=GateConfig(max_count=max_count),
             ),
         )

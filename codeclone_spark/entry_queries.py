@@ -762,14 +762,8 @@ _LSH_MAX_BUCKET = 40  # below the sf0.01 max bucket (60) so the oracle exercises
 
 def dedup_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     d = _docs(spark, sf)
-    # CCSPARK_LSH_PREFILTER_HOT=1 routes the registry query through the
-    # buffer-bounded hot-key prefilter (count + broadcast anti-join BEFORE
-    # collect_list).  Output is identical by construction — the oracle
-    # stays green on either path — so the knob exists purely to bench and
-    # soak the adversarial-corpus shape end-to-end.
-    hot = os.environ.get("CCSPARK_LSH_PREFILTER_HOT", "0") == "1"
     return dd.lsh_candidate_pairs(
-        d, "doc_id", "text", max_bucket=_LSH_MAX_BUCKET, prefilter_hot=hot
+        d, "doc_id", "text", max_bucket=_LSH_MAX_BUCKET
     ).orderBy("id_a", "id_b")
 
 
@@ -860,10 +854,6 @@ def dedup_lsh_verified_pairs(spark: SparkSession, sf: str) -> DataFrame:
     exact n-gram Jaccard computed ONLY over the candidate-confined shingle
     index — the 100 TB-safe form of dedup_jaccard_pairs."""
     d = _docs(spark, sf)
-    # scratch: the candidate pairs are consumed twice inside the composed
-    # ladder (pair stream + id-set confinement); materializing them once
-    # keeps the expensive MinHash pipeline single-execution (exchange
-    # reuse is an optimizer courtesy — see lsh_verified_pairs docstring)
     return dd.lsh_verified_pairs(
         d, "doc_id", "text", max_bucket=_LSH_MAX_BUCKET, threshold=0.5,
         scratch_dir=_cc_scratch("verified"),
@@ -902,18 +892,23 @@ def _lsh_verified_sql() -> str:
     )
 
 
-def _cc_scratch(tag: str) -> str:
-    """Scratch root for the iterative-ladder registry queries.  The
-    operators always materialize through scratch (candidates, CC rounds,
-    labels); on this sandbox the default temp root is a single slow
-    virtio disk, so prefer the RAM-backed /dev/shm when it exists — on a
-    real cluster this would be HDFS/S3 scratch.  One deterministic dir
-    per (query, pid): repeat calls in one session overwrite instead of
-    leaking, separate sessions never collide."""
+def _scratch_root() -> str:
+    """Local scratch root for the registry queries that stage files: the
+    RAM-backed /dev/shm when it exists (a default temp root on a single
+    virtio disk is slow), else the system temp root.  On a real cluster
+    this would be HDFS/S3 scratch."""
     import tempfile
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    path = os.path.join(base, f"ccspark_q_{tag}_{os.getpid()}")
+    return "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+
+
+def _cc_scratch(tag: str) -> str:
+    """Scratch dir for the iterative-ladder registry queries.  The
+    operators always materialize through scratch (candidates, CC rounds,
+    labels).  One deterministic dir per (query, pid) under
+    :func:`_scratch_root`: repeat calls in one session overwrite instead
+    of leaking, separate sessions never collide."""
+    path = os.path.join(_scratch_root(), f"ccspark_q_{tag}_{os.getpid()}")
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -1340,11 +1335,8 @@ def stream_neardup_updates(spark: SparkSession, sf: str) -> DataFrame:
     from codeclone_spark.streaming.neardup import run_stream_neardup
 
     data_dir = clips_dir_for(sf)
-    # RAM-backed scratch when available: the deterministic staging below
-    # copies the corpus files once, and the default temp root on this
-    # sandbox is a single slow virtio disk (same rationale as _cc_scratch)
-    _tmp_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    tmp = tempfile.mkdtemp(prefix="ccspark_stream_nd_", dir=_tmp_base)
+    # the deterministic staging below copies the corpus files once
+    tmp = tempfile.mkdtemp(prefix="ccspark_stream_nd_", dir=_scratch_root())
     out, ckpt = os.path.join(tmp, "out"), os.path.join(tmp, "ckpt")
     try:
         # Stage the corpus files with DETERMINISTIC, strictly increasing

@@ -150,7 +150,6 @@ def lsh_candidate_pairs(
     n_hashes: int = MINHASH_K,
     band_size: int = 2,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    prefilter_hot: bool = False,
 ) -> DataFrame:
     """MinHash-LSH: band the signature, bucket within bands, emit distinct
     candidate pairs (a < b).  Shuffle keys are (band_idx, band_key) —
@@ -167,27 +166,15 @@ def lsh_candidate_pairs(
     cap bounds the PAIR OUTPUT, not the aggregation buffer: collect_list
     materializes each bucket fully before the size filter runs, so one
     degenerate key of d ids still builds one O(d) array in a single buffer
-    (fine up to millions of ids).  For adversarial corpora pass
-    ``prefilter_hot=True``: a count-aggregate finds the over-cap keys
-    (tiny by construction) and a broadcast anti-join drops their rows
-    BEFORE collect_list, bounding every aggregation buffer at
-    *max_bucket* — at the cost of a second pass over the signature
-    pipeline (identical output either way).  The expensive
-    shingle+MinHash pipeline is consumed exactly once BY CONSTRUCTION — no
-    self-join, so no localCheckpoint / scratch-table materialization, full
-    recompute lineage on executor loss, and no Window pre-pass (the size
-    filter rides the same aggregation).  This is the 100 TB shape: the wide
-    ops are the signature fold, the capped bucket shuffle, and the final
-    pair distinct — no join exchanges anywhere."""
+    (fine up to millions of ids).  The expensive shingle+MinHash pipeline
+    is consumed exactly once BY CONSTRUCTION — no self-join, so no
+    localCheckpoint / scratch-table materialization, full recompute
+    lineage on executor loss, and no Window pre-pass (the size filter
+    rides the same aggregation).  This is the 100 TB shape: the wide ops
+    are the signature fold, the capped bucket shuffle, and the final pair
+    distinct — no join exchanges anywhere.  The function stays lazy:
+    nothing runs until the caller's action."""
     banded = _banded_signatures(df, id_col, text_col, k, n_hashes, band_size)
-    if prefilter_hot and max_bucket is not None:
-        hot = (
-            banded.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket)
-            .select("band", "key")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
     buckets = banded.groupBy("band", "key").agg(
         F.collect_list("id").alias("ids")
     )
@@ -277,8 +264,8 @@ def lsh_verified_pairs(
     band_size: int = 2,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     threshold: float = 0.6,
-    prefilter_hot: bool = False,
-    scratch_dir: str | None = None,
+    *,
+    scratch_dir: str,
 ) -> DataFrame:
     """The COMPOSED dedup ladder: cheap LSH banding proposes candidate
     pairs, exact n-gram Jaccard verifies ONLY those candidates — the
@@ -300,35 +287,27 @@ def lsh_verified_pairs(
     bounded by the document's own length — the same per-row boundedness as
     the decode passes, not a skew-prone aggregation.
 
-    The MinHash pipeline appears under both candidate consumers (pair
-    stream + id-set confinement).  At small scale AQE deduplicates the
-    identical subplans (ReusedExchange, plan-asserted in
-    test_plans_physical.py); at a 601k-doc corpus the final adaptive plan
-    was MEASURED to contain zero ReusedExchange nodes — runtime
-    re-optimization canonicalizes the two consumers differently and the
-    MinHash pipeline silently computes twice.  Exchange reuse is an
-    optimizer COURTESY, not a contract, so scale call-sites (the engine's
-    neardup stage, the scaling bench) pass *scratch_dir*: the candidate
-    pairs are materialized there as parquet once and both consumers read
-    the scan — upstream computed exactly once by construction,
+    The candidate pairs have two consumers (pair stream + id-set
+    confinement).  AQE exchange reuse would share the MinHash pipeline
+    between them only as an optimizer COURTESY: at a 601k-doc corpus the
+    final adaptive plan was MEASURED to contain zero ReusedExchange nodes
+    and the pipeline silently computed twice.  So the candidates are
+    written to ``<scratch_dir>/cands`` as parquet EAGERLY, at call time
+    (one Spark job before this function returns), and both consumers read
+    that scan — upstream computed exactly once by construction,
     recompute-on-executor-loss rolls back to the scratch file (the same
-    checkpoint discipline as connected_components).  With
-    ``scratch_dir=None`` the plan stays fully lazy/lineage-complete —
-    right for small corpora and callers without a writable scratch
-    location; every registered query passes one, as the engine does.
+    checkpoint discipline as connected_components).  On a multi-executor
+    cluster *scratch_dir* must be shared storage (HDFS/S3).
 
     Returns (id_a, id_b, jaccard) for candidates with exact Jaccard >=
     *threshold*; a pair LSH never proposed is absent even if its true
     similarity clears the threshold (the usual LSH recall trade-off —
     banding parameters set the recall floor)."""
-    cands = lsh_candidate_pairs(
-        df, id_col, text_col, k, n_hashes, band_size, max_bucket,
-        prefilter_hot=prefilter_hot,
-    )
-    if scratch_dir is not None:
-        path = os.path.join(scratch_dir, "cands")
-        cands.write.mode("overwrite").parquet(path)
-        cands = df.sparkSession.read.parquet(path)
+    path = os.path.join(scratch_dir, "cands")
+    lsh_candidate_pairs(
+        df, id_col, text_col, k, n_hashes, band_size, max_bucket
+    ).write.mode("overwrite").parquet(path)
+    cands = df.sparkSession.read.parquet(path)
     cand_ids = (
         cands.select(F.col("id_a").alias("id"))
         .unionByName(cands.select(F.col("id_b").alias("id")))

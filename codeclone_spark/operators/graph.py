@@ -60,8 +60,6 @@ agree bit-for-bit.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,18 +71,20 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 50,
     simple_rounds: int = 4,
-    scratch_dir: str | None = None,
+    *,
+    scratch_dir: str,
 ) -> DataFrame:
     """(id, cluster_id) for every node of the undirected *edges* graph;
     ``cluster_id`` = minimum node id in the component (deterministic
     canonical representative, the reference's sorted-group-id convention,
     ``clone_baseline.py:511-527``).
 
-    *scratch_dir* receives the normalized edge frame, the per-doubling-round
-    label frames, and the final labels; defaults to a fresh directory under
-    the system temp root.  On a multi-executor cluster pass a path on shared storage
-    (HDFS/S3) — executor-visible scratch is the standard cost of iterative
-    graph algorithms at scale.
+    *scratch_dir* (required) receives the incoming edge frame, the
+    per-doubling-round label frames and the final labels; the caller owns
+    it and removes it.  Repeat calls with the same directory overwrite.
+    On a multi-executor cluster pass a path on shared storage (HDFS/S3) —
+    executor-visible scratch is the standard cost of iterative graph
+    algorithms at scale.
 
     Raises RuntimeError if *max_iter* total rounds do not reach the
     fixpoint — a correctness guard (an unconverged labeling is NOT
@@ -92,10 +92,9 @@ def connected_components(
     diameters past 2**40, so the guard fires only on a genuine bug.
     """
     spark = edges.sparkSession
-    scratch = scratch_dir or tempfile.mkdtemp(prefix="ccspark_cc_")
 
     def _truncate(frame: DataFrame, tag: str) -> DataFrame:
-        path = os.path.join(scratch, tag)
+        path = os.path.join(scratch_dir, tag)
         frame.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 

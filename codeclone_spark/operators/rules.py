@@ -587,7 +587,6 @@ def build_verdicts(
     violation_counts: DataFrame,
     partition_rows: DataFrame,
     gates: GateConfig,
-    accepted: set[str] | None = None,
     test_lane: set[str] | None = None,
 ) -> DataFrame:
     """(partition, rule_id) -> pass/reason/novelty.

@@ -45,7 +45,7 @@ from typing import Any
 from codeclone_spark import BASELINE_SCHEMA_VERSION, ENGINE_NAME, ENGINE_VERSION
 
 MAX_BASELINE_BYTES = 8 * 1024 * 1024  # bounded read (contracts/__init__.py:82)
-DEFAULT_CREATED_AT = "1970-01-01T00:00:00Z"  # deterministic unless caller stamps
+DEFAULT_CREATED_AT = "1970-01-01T00:00:00Z"  # fixed: outputs stay deterministic
 
 
 def _canonical(payload: dict[str, Any]) -> bytes:
@@ -68,7 +68,6 @@ def write_baseline(
     histograms: dict[str, Any],
     uniqueness: dict[str, Any],
     accepted_violations: list[str],
-    created_at: str = DEFAULT_CREATED_AT,
     schema: dict[str, Any] | None = None,
     accepted_ref: dict[str, Any] | None = None,
     clones: dict[str, list[str]] | None = None,
@@ -95,7 +94,7 @@ def write_baseline(
             "generator": {"name": ENGINE_NAME, "version": ENGINE_VERSION},
             "schema_version": BASELINE_SCHEMA_VERSION,
             "engine_version": ENGINE_VERSION,
-            "created_at": created_at,
+            "created_at": DEFAULT_CREATED_AT,
             "payload_sha256": payload_sha256(payload),
         },
         **payload,

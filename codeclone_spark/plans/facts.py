@@ -135,7 +135,6 @@ def build_facts(
     clips: DataFrame,
     fixtures_meta: DataFrame,
     fixtures_pcm: DataFrame,
-    force_smj: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Facts frame for the rule pass — the only way facts are built:
 
@@ -155,20 +154,19 @@ def build_facts(
     Returns ``(facts, decoded)``; the caller unpersists *decoded* once it
     has consumed *facts*.  Callers restrict *clips*/*fixtures_pcm* to a
     partition subset themselves (resume pruning, reference
-    core/discovery.py:118-190).  *force_smj* disables broadcast to exercise
-    the sort-merge path the north_star demands for cluster-scale fixtures.
+    core/discovery.py:118-190).  The phase-B join strategy is Spark's: it
+    broadcasts the fixture meta below ``spark.sql.autoBroadcastJoinThreshold``
+    and sort-merges above it (set the conf to -1 to force sort-merge).
     """
     decoded = decode_stage(clips).persist()
     suspect_parts = sorted(
         r["part"]
-        for r in suspect_filter(join_meta(decoded, fixtures_meta, force_smj))
+        for r in suspect_filter(join_meta(decoded, fixtures_meta))
         .select("part")
         .distinct()
         .collect()
     )
-    facts = assemble_facts(
-        decoded, clips, fixtures_meta, fixtures_pcm, suspect_parts, force_smj
-    )
+    facts = assemble_facts(decoded, clips, fixtures_meta, fixtures_pcm, suspect_parts)
     return facts, decoded
 
 
@@ -178,7 +176,7 @@ def decode_stage(clips: DataFrame) -> DataFrame:
     return clips.mapInPandas(decode_map_in_pandas, schema=DECODE_OUT_SCHEMA)
 
 
-def join_meta(decoded: DataFrame, fixtures_meta: DataFrame, force_smj: bool = False) -> DataFrame:
+def join_meta(decoded: DataFrame, fixtures_meta: DataFrame) -> DataFrame:
     """Phase B: join the small fixture meta columns onto decoded facts."""
     meta = fixtures_meta.select(
         "clip_id",
@@ -187,8 +185,7 @@ def join_meta(decoded: DataFrame, fixtures_meta: DataFrame, force_smj: bool = Fa
         "expected_transcript",
         "expected_dur_ms",
     )
-    fx_meta = meta.hint("merge") if force_smj else meta
-    return decoded.join(fx_meta, "clip_id", "left")
+    return decoded.join(meta, "clip_id", "left")
 
 
 def suspect_filter(f: DataFrame):
@@ -207,13 +204,12 @@ def assemble_facts(
     fixtures_meta: DataFrame,
     fixtures_pcm: DataFrame,
     suspect_parts: list[str],
-    force_smj: bool = False,
 ) -> DataFrame:
     """Phases B+C.  *suspect_parts* is the materialized suspect partition
     list: the phase-C re-scans prune statically to those directories —
     guaranteed, no reliance on dynamic partition pruning."""
     # --- phase B: small-column meta join
-    f = join_meta(decoded, fixtures_meta, force_smj)
+    f = join_meta(decoded, fixtures_meta)
 
     sha_match = F.col("pcm_sha256") == F.col("fx_sha256")
     fixture_status = (

@@ -93,7 +93,6 @@ class RunConfig:
     gating: bool = True
     update_baseline: bool = False
     wave_size: int | None = None  # None -> single wave (max parallelism)
-    force_smj: bool = False
     # Partitions matching this regex are the TEST lane (reference
     # is_test_filepath routing): fully validated and reported, but their
     # gate verdicts are informational — they never fail a run.
@@ -128,9 +127,6 @@ class RunConfig:
     neardup_threshold: float = 0.9
     # LSH bucket cap (caps as backpressure) for the candidate stage
     neardup_max_bucket: int = 1024
-    # bound the LSH aggregation buffers too (adversarial boilerplate
-    # corpora; second pass over the signature pipeline, identical output)
-    neardup_prefilter_hot: bool = False
     # Per-(rule, partition) violation exemplar cap: a pathological table
     # (e.g. an all-null column at 10^12 rows) must not materialize 10^12
     # violation rows.  Gate counts/verdicts/report totals use TRUE pre-cap
@@ -145,7 +141,6 @@ class RunConfig:
     # distributively — the keys never materialize on the driver.
     accepted_inline_max: int = 10_000
     gates: GateConfig = field(default_factory=GateConfig)
-    created_at: str = bl.DEFAULT_CREATED_AT
 
 
 @dataclass
@@ -258,8 +253,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         wave_name = "wave-" + hashlib.sha1("|".join(wave).encode()).hexdigest()[:12]
         in_wave = F.col("part").isin(wave)
         facts, decoded = build_facts(
-            clips.filter(in_wave), fixtures_meta, fixtures_pcm.filter(in_wave),
-            force_smj=cfg.force_smj,
+            clips.filter(in_wave), fixtures_meta, fixtures_pcm.filter(in_wave)
         )
         facts = facts.persist()
         wave_t0 = time.monotonic()
@@ -347,7 +341,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     if cfg.test_lane_pattern:
         lane_rx = re.compile(cfg.test_lane_pattern)
         lane_parts = {p for p in all_parts if lane_rx.search(p)}
-    verdicts = build_verdicts(counts, part_rows, cfg.gates, set(accepted), lane_parts)
+    verdicts = build_verdicts(counts, part_rows, cfg.gates, lane_parts)
     quantiles_by_col = _table_quantiles(table_stats)
     drift_rows, drift_metrics = _drift_verdicts(
         cfg.gates, snapshot, table_stats, quantiles_by_col
@@ -750,7 +744,6 @@ def _neardup_stage(
             ndocs, "doc_id", "transcript",
             max_bucket=cfg.neardup_max_bucket or None,
             threshold=cfg.neardup_threshold,
-            prefilter_hot=cfg.neardup_prefilter_hot,
             scratch_dir=nd_scratch,
         )
         comps = connected_components(nd_edges, scratch_dir=nd_scratch)
@@ -1253,7 +1246,6 @@ def _update_baseline(
         histograms=metrics["histograms"],
         uniqueness=metrics["uniqueness"],
         accepted_violations=all_keys,
-        created_at=cfg.created_at,
         schema={"columns": current_schema, "partition_keys": ["part"]},
         accepted_ref=ref,
         clones=clones_out,
@@ -1265,5 +1257,5 @@ def _meta(cfg: RunConfig) -> dict[str, Any]:
         "generator": {"name": ENGINE_NAME, "version": ENGINE_VERSION},
         "data_dir": cfg.data_dir,
         "gating": cfg.gating,
-        "created_at": cfg.created_at,
+        "created_at": bl.DEFAULT_CREATED_AT,
     }

@@ -150,3 +150,34 @@ def test_driver_rows_enter_spark_only_through_local_frame():
                 ):
                     violations.append(f"{rel}:{node.lineno}")
     assert not violations, "\n".join(violations)
+
+
+ENV_READER = "session.py"
+
+
+def test_env_reads_only_in_session():
+    """Process environment is read in one place, the session factory: an
+    env var read deeper in the package is a hidden knob that no
+    ``RunConfig`` field, CLI flag or session conf shows."""
+    violations = []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fn in sorted(files):
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG_ROOT)
+            if not fn.endswith(".py") or rel == ENV_READER:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "os"
+                ) or (
+                    isinstance(node, ast.ImportFrom)
+                    and node.module == "os"
+                    and {a.name for a in node.names} & {"environ", "getenv"}
+                ):
+                    violations.append(f"{rel}:{node.lineno}")
+    assert not violations, "\n".join(violations)

@@ -59,11 +59,13 @@ def test_jaccard_pairs(docs):
     assert (1, 4) not in rows
 
 
-def test_lsh_verified_pairs_composes_ladder(docs):
+def test_lsh_verified_pairs_composes_ladder(docs, tmp_path):
     """Composed ladder = exact-Jaccard survivors among LSH candidates."""
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.lsh_verified_pairs(docs, "doc_id", "text", threshold=0.5).collect()
+        for r in dd.lsh_verified_pairs(
+            docs, "doc_id", "text", threshold=0.5, scratch_dir=str(tmp_path)
+        ).collect()
     }
     cands = {
         (r["id_a"], r["id_b"])
@@ -198,24 +200,6 @@ def test_lsh_hot_bucket_cap(spark):
     assert full.count() >= 190  # C(20,2)
 
 
-def test_lsh_hot_key_prefilter_same_output_bounded_buffers(spark):
-    """prefilter_hot=True drops over-cap keys with a broadcast anti-join
-    BEFORE collect_list (bounding every aggregation buffer), and must be
-    output-identical to the default post-aggregation cap."""
-    rows = [(f"same{i}", "xxxxxyyyyyzzzzz") for i in range(20)] + [
-        ("a1", "hello world one two"),
-        ("a2", "hello world one two!"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    base = dd.lsh_candidate_pairs(docs, "doc_id", "text", max_bucket=10)
-    pre = dd.lsh_candidate_pairs(
-        docs, "doc_id", "text", max_bucket=10, prefilter_hot=True
-    )
-    assert sorted(map(tuple, base.collect())) == sorted(map(tuple, pre.collect()))
-    plan = pre._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
-
-
 def test_lsh_pairs_single_pass_no_checkpoint(spark, tmp_path):
     """The pair plan consumes the shingle+MinHash pipeline exactly once:
     one source scan, one bucket shuffle, no self-join and no checkpoint
@@ -236,32 +220,37 @@ def test_lsh_pairs_single_pass_no_checkpoint(spark, tmp_path):
     assert plan.count("Exchange") == 3
 
 
-def test_connected_components_labels(spark):
+def test_connected_components_labels(spark, tmp_path):
     """Min-label propagation = component minimum for every node; raises
     (never returns a wrong labeling) when the diameter exceeds max_iter."""
     from codeclone_spark.operators import graph as g
 
+    def cc(edges, tag, **kw):
+        return g.connected_components(
+            edges, scratch_dir=str(tmp_path / tag), **kw
+        )
+
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (5, 4), (7, 6), (6, 8)], ["id_a", "id_b"]
     )
-    got = {r["id"]: r["cluster_id"] for r in g.connected_components(edges).collect()}
+    got = {r["id"]: r["cluster_id"] for r in cc(edges, "labels").collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 6, 8: 6}
     sizes = {
         r["cluster_id"]: r["n"]
-        for r in g.cluster_sizes(g.connected_components(edges)).collect()
+        for r in g.cluster_sizes(cc(edges, "sizes")).collect()
     }
     assert sizes == {1: 3, 4: 2, 6: 3}
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], ["id_a", "id_b"]
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        g.connected_components(chain, max_iter=2)
+        cc(chain, "budget", max_iter=2)
     # the default budget converges the same chain
-    full = {r["id"]: r["cluster_id"] for r in g.connected_components(chain).collect()}
+    full = {r["id"]: r["cluster_id"] for r in cc(chain, "chain").collect()}
     assert set(full.values()) == {0}
 
 
-def test_connected_components_long_chain_and_no_leaked_persist(spark):
+def test_connected_components_long_chain_and_no_leaked_persist(spark, tmp_path):
     """Diameter robustness (pointer doubling): a 60-hop path graph — which
     plain min-label propagation could never finish inside the old
     max_iter=25 budget — converges under the default budget; and the call
@@ -273,7 +262,12 @@ def test_connected_components_long_chain_and_no_leaked_persist(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], ["id_a", "id_b"]
     )
-    got = {r["id"]: r["cluster_id"] for r in g.connected_components(chain).collect()}
+    got = {
+        r["id"]: r["cluster_id"]
+        for r in g.connected_components(
+            chain, scratch_dir=str(tmp_path / "one")
+        ).collect()
+    }
     assert got == {i: 0 for i in range(61)}
     # two disjoint long chains keep distinct minima
     two = spark.createDataFrame(
@@ -281,7 +275,12 @@ def test_connected_components_long_chain_and_no_leaked_persist(spark):
         + [(i, i + 1) for i in range(100, 140)],
         ["id_a", "id_b"],
     )
-    got2 = {r["id"]: r["cluster_id"] for r in g.connected_components(two).collect()}
+    got2 = {
+        r["id"]: r["cluster_id"]
+        for r in g.connected_components(
+            two, scratch_dir=str(tmp_path / "two")
+        ).collect()
+    }
     assert set(got2.values()) == {0, 100}
     assert got2[31 - 1] == 0 and got2[140] == 100
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
@@ -322,7 +321,7 @@ def test_dedup_cli_manifest(spark, tmp_path, docs):
         [
             "dedup", "--input", src, "--id-col", "doc_id",
             "--text-col", "text", "--out-dir", out,
-            "--threshold", "0.5", "--prefilter-hot",
+            "--threshold", "0.5",
         ]
     )
     assert rc == 0

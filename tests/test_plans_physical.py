@@ -52,17 +52,42 @@ def test_fixture_join_broadcast_small(spark, tiny_dir):
     assert "BroadcastHashJoin" in plan  # tiny fixture meta fits the threshold
 
 
-def test_fixture_join_smj_forced(spark, tiny_dir):
+def test_fixture_join_sort_merges_under_broadcast_conf(spark, tiny_dir):
+    """The phase-B fixture meta join is broadcast by default and
+    sort-merged once ``spark.sql.autoBroadcastJoinThreshold=-1`` (the
+    cluster-scale fixtures path), with identical facts either way."""
+    from codeclone_spark.plans.facts import decode_stage, join_meta
+
     clips = read_clips(spark, tiny_dir)
-    facts, decoded = build_facts(
-        clips,
-        read_fixtures_meta(spark, tiny_dir),
-        read_fixtures_pcm(spark, tiny_dir),
-        force_smj=True,
-    )
-    plan = _plan(facts)
-    decoded.unpersist()
-    assert "SortMergeJoin" in plan  # the cluster-scale fixtures path
+    meta = read_fixtures_meta(spark, tiny_dir)
+    pcm = read_fixtures_pcm(spark, tiny_dir)
+
+    def meta_join_plan() -> str:
+        return _plan(join_meta(decode_stage(clips), meta)).split(
+            "== Physical Plan =="
+        )[-1]
+
+    def facts_rows() -> list[str]:
+        facts, decoded = build_facts(clips, meta, pcm)
+        rows = sorted(map(repr, facts.collect()))  # repr: NaN-safe equality
+        decoded.unpersist()
+        return rows
+
+    default_plan = meta_join_plan()
+    assert "BroadcastHashJoin" in default_plan
+    assert "SortMergeJoin" not in default_plan
+    default_rows = facts_rows()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        smj_plan = meta_join_plan()
+        smj_rows = facts_rows()
+    finally:
+        spark.conf.set(key, prev)
+    assert "SortMergeJoin" in smj_plan
+    assert "BroadcastHashJoin" not in smj_plan
+    assert smj_rows == default_rows
 
 
 def test_two_phase_decode_is_map_only(spark, tiny_dir):
@@ -128,7 +153,7 @@ def test_stats_registry_width_adds_zero_wave_jobs(spark):
     assert wide == narrow  # zero marginal jobs per added registry column
 
 
-def test_lsh_verified_pairs_index_is_candidate_confined(spark):
+def test_lsh_verified_pairs_index_is_candidate_confined(spark, tmp_path):
     """The composed LSH→exact-verify plan must confine the inverted shingle
     index with broadcast semi-joins (candidate docs, then candidate pairs)
     BEFORE the quadratic shingle self-join — the property that keeps exact
@@ -139,14 +164,13 @@ def test_lsh_verified_pairs_index_is_candidate_confined(spark):
         [(i, f"shared boilerplate text block number {i % 3}") for i in range(24)],
         ["doc_id", "text"],
     )
-    body = _plan(dd.lsh_verified_pairs(docs, "doc_id", "text")).split(
-        "== Physical Plan =="
-    )[-1]
-    # two confinement semi-joins: shingle index ⋉ candidate ids,
-    # pair stream ⋉ candidate pairs (AQE picks broadcast when the
-    # candidate set is small — asserted at runtime by the ReusedExchange
-    # test below; statically they plan as shuffles, which is the correct
-    # fallback when candidates are most of a dup-heavy corpus)
+    pairs = dd.lsh_verified_pairs(
+        docs, "doc_id", "text", scratch_dir=str(tmp_path)
+    )
+    body = _plan(pairs).split("== Physical Plan ==")[-1]
+    # shingle index ⋉ candidate ids under each side of the array join
+    # (broadcast while the candidate set is small; a shuffled semi-join is
+    # the correct fallback when candidates are most of a dup-heavy corpus)
     assert body.count("LeftSemi") >= 2
     assert "CartesianProduct" not in body
     # the doc-CONTENT array side is explicitly shuffle-hash joined: its
@@ -155,48 +179,22 @@ def test_lsh_verified_pairs_index_is_candidate_confined(spark):
     assert "ShuffledHashJoin" in body
 
 
-def test_lsh_verified_pairs_reuses_exchanges(spark):
-    """The lazy (scratch_dir=None) ladder references the LSH candidate
-    subplan twice (pair stream + id-set semi-join); at this scale AQE
-    deduplicates the identical exchanges.  NOTE this is a small-scale
-    courtesy, not a contract: at a 601k-doc corpus the final adaptive plan
-    was measured with ZERO ReusedExchange nodes (MinHash computed twice),
-    which is why scale call-sites pass scratch_dir — see the
-    materialization test below.  Reuse only materializes in the AQE-FINAL
-    plan, so assert after an action."""
-    from codeclone_spark.operators import dedup as dd
-
-    docs = spark.createDataFrame(
-        [(i, f"shared boilerplate text block number {i % 3}") for i in range(24)],
-        ["doc_id", "text"],
-    )
-    pairs = dd.lsh_verified_pairs(docs, "doc_id", "text")
-    pairs.collect()  # materialize so AQE finalizes the plan
-    final = _plan(pairs)
-    assert "isFinalPlan=true" in final
-    assert final.count("ReusedExchange") >= 2
-
-
 def test_lsh_verified_pairs_scratch_runs_minhash_once(spark, tmp_path):
-    """With scratch_dir the candidate pairs come from a parquet
-    materialization, so the verify plan contains NO MinHash pipeline at
-    all (md5 appears only in MinHash base hashing — the shingle-array side
-    is md5-free) and the output is identical to the lazy plan's."""
+    """The candidate pairs come from a parquet materialization in
+    scratch_dir, so the verify plan contains NO MinHash pipeline at all
+    (md5 appears only in MinHash base hashing — the shingle-array side is
+    md5-free)."""
     from codeclone_spark.operators import dedup as dd
 
     docs = spark.createDataFrame(
         [(i, f"shared boilerplate text block number {i % 3}") for i in range(24)],
         ["doc_id", "text"],
     )
-    lazy = dd.lsh_verified_pairs(docs, "doc_id", "text")
     mat = dd.lsh_verified_pairs(
         docs, "doc_id", "text", scratch_dir=str(tmp_path)
     )
     body = _plan(mat).split("== Physical Plan ==")[-1]
     assert "md5" not in body  # upstream consumed exactly once, via scratch
-    assert sorted(map(tuple, mat.collect())) == sorted(
-        map(tuple, lazy.collect())
-    )
 
 
 def test_filter_pushdown_to_parquet(spark, tiny_dir):
