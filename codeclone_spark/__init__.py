@@ -11,7 +11,7 @@ vectorized Arrow decode UDF, and the findings are data-quality violations.
 Layout
 ------
 - ``session``     SparkSession factory (Arrow on, UTC, AQE)
-- ``schema``      canonical StructTypes (clips, fixtures, violations, verdicts)
+- ``schema``      the clips input schema + ``local_frame`` (driver rows)
 - ``synth``       deterministic synthetic clips/fixtures generator
 - ``functions``   audio decode/codec UDFs, text analytics, vector math
 - ``operators``   rule registry + stats/uniqueness/referential/drift/audio

@@ -718,8 +718,6 @@ _SHINGLE_SQL = r"""
   GROUP BY doc_id, shingle
 """.replace("{km1}", str(dd.SHINGLE_K - 1)).replace("{k}", str(dd.SHINGLE_K))
 
-_H60_SQL = "('0x' || substr(md5('{seed}' || shingle), 1, 15))::UBIGINT"
-
 # MinHash universal-hash family (mirrors dd.minhash_signatures): one
 # md5-derived 32-bit base hash + affine transforms with literal constants.
 _MH_BASE_SQL = "(('0x' || substr(md5(shingle), 1, 8))::UBIGINT)::BIGINT"

@@ -354,12 +354,13 @@ def rule_spec(rule_id: str) -> Rule:
     return RULE_BY_ID.get(rule_id, UNMAPPED_RULE)
 
 
-# Fixed-bin mergeable quantile sketch for dur_ms: 25 ms resolution over the
-# legal duration domain + one overflow bin.  Per-partition count arrays merge
-# by element-wise sum across waves/resumes (the property a t-digest would
-# give; Spark's percentile_approx state is not ledger-persistable, so the
-# sketch IS the distributed quantile path — percentile_approx remains the
-# per-partition fast path in the same groupBy).
+# Fixed-bin mergeable quantile sketch for dur_ms: 25 ms bins up to 3,200 ms
+# + one overflow bin.  Per-partition count arrays merge by element-wise sum
+# across waves/resumes (the property a t-digest would give; Spark's
+# percentile_approx state is not ledger-persistable).  The sketch is the only
+# quantile path: no percentile_approx runs anywhere.  Its 3,200 ms ceiling
+# clamps longer clips into the overflow bin, a known defect tracked in
+# ROADMAP.md (item 6).
 QSK_BIN_MS = 25
 QSK_MAX_MS = 3200
 QSK_NBINS = QSK_MAX_MS // QSK_BIN_MS + 1  # + overflow

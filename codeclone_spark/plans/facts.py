@@ -20,43 +20,43 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from codeclone_spark.functions.audio import decode_map_in_pandas, snr_map_in_pandas
+from codeclone_spark.functions.audio import (
+    DECODE_CARRIED,
+    DECODE_FACTS,
+    DECODE_OUT_SCHEMA,
+    decode_map_in_pandas,
+    snr_map_in_pandas,
+    to_nfc,
+)
 from codeclone_spark.synth import LOSSLESS_SNR_DB
 
-FACTS_OUT_SCHEMA = StructType(
+SNR_OUT_SCHEMA = StructType(
     [
         StructField("clip_id", StringType()),
-        StructField("sr_hz", IntegerType()),
-        StructField("dur_ms", IntegerType()),
-        StructField("codec", StringType()),
-        StructField("transcript", StringType()),
-        StructField("part", StringType()),
+        StructField("snr_db", DoubleType()),
+    ]
+)
+# The facts row derives from the decode row: its carried columns, the
+# fixture meta columns phase B joins, its PCM facts (transcript_nfc only
+# feeds the transcript match), then the columns phases B and C derive.
+FACTS_OUT_SCHEMA = StructType(
+    [DECODE_OUT_SCHEMA[c] for c in DECODE_CARRIED]
+    + [
         StructField("fx_sha256", StringType()),
         StructField("expected_transcript", StringType()),
         StructField("expected_dur_ms", IntegerType()),
-        StructField("decode_ok", BooleanType()),
-        StructField("error_kind", StringType()),
-        StructField("decoded_samples", LongType()),
-        StructField("decoded_dur_ms", DoubleType()),
-        StructField("pcm_sha256", StringType()),
-        StructField("rms", DoubleType()),
-        StructField("peak", DoubleType()),
-        StructField("clipping_ratio", DoubleType()),
-        StructField("silence_ratio", DoubleType()),
-        StructField("spectral_flatness", DoubleType()),
-        StructField("dominant_freq_hz", DoubleType()),
-        StructField("band_energies", ArrayType(DoubleType())),
-        StructField("snr_db", DoubleType()),
+    ]
+    + [DECODE_OUT_SCHEMA[c] for c in DECODE_FACTS]
+    + [
+        SNR_OUT_SCHEMA["snr_db"],
         StructField("fixture_status", StringType()),
         StructField("transcript_match", BooleanType()),
     ]
@@ -85,48 +85,12 @@ def read_fixtures_pcm(spark: SparkSession, data_dir: str) -> DataFrame:
     return spark.read.parquet(f"{data_dir}/fixtures_pcm")
 
 
-DECODE_OUT_SCHEMA = StructType(
-    [
-        StructField("clip_id", StringType()),
-        StructField("sr_hz", IntegerType()),
-        StructField("dur_ms", IntegerType()),
-        StructField("codec", StringType()),
-        StructField("transcript", StringType()),
-        StructField("part", StringType()),
-        StructField("transcript_nfc", StringType()),
-        StructField("decode_ok", BooleanType()),
-        StructField("error_kind", StringType()),
-        StructField("decoded_samples", LongType()),
-        StructField("decoded_dur_ms", DoubleType()),
-        StructField("pcm_sha256", StringType()),
-        StructField("rms", DoubleType()),
-        StructField("peak", DoubleType()),
-        StructField("clipping_ratio", DoubleType()),
-        StructField("silence_ratio", DoubleType()),
-        StructField("spectral_flatness", DoubleType()),
-        StructField("dominant_freq_hz", DoubleType()),
-        StructField("band_energies", ArrayType(DoubleType())),
-    ]
-)
-
-SNR_OUT_SCHEMA = StructType(
-    [
-        StructField("clip_id", StringType()),
-        StructField("snr_db", DoubleType()),
-    ]
-)
-
-
 def _nfc_udf():
     """Built lazily — pandas_udf type parsing needs a live session."""
 
     @pandas_udf(StringType())
     def nfc(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        return s.map(
-            lambda x: unicodedata.normalize("NFC", x) if x is not None else None
-        )
+        return s.map(to_nfc)
 
     return nfc
 
@@ -247,32 +211,12 @@ def assemble_facts(
         .groupBy("clip_id")
         .agg(F.min("snr_db").alias("snr_db_joined"))  # dup clip_ids: one row
     )
-    out = f.join(snr, "clip_id", "left").select(
-        "clip_id",
-        "sr_hz",
-        "dur_ms",
-        "codec",
-        "transcript",
-        "part",
-        "fx_sha256",
-        "expected_transcript",
-        "expected_dur_ms",
-        "decode_ok",
-        "error_kind",
-        "decoded_samples",
-        "decoded_dur_ms",
-        "pcm_sha256",
-        "rms",
-        "peak",
-        "clipping_ratio",
-        "silence_ratio",
-        "spectral_flatness",
-        "dominant_freq_hz",
-        "band_energies",
+    *passed, snr_db, status, match = FACTS_OUT_SCHEMA.names
+    return f.join(snr, "clip_id", "left").select(
+        *passed,
         F.when(F.col("decode_ok") & sha_match, F.lit(LOSSLESS_SNR_DB))
         .otherwise(F.col("snr_db_joined"))
-        .alias("snr_db"),
-        fixture_status.alias("fixture_status"),
-        transcript_match.alias("transcript_match"),
+        .alias(snr_db),
+        fixture_status.alias(status),
+        transcript_match.alias(match),
     )
-    return out

@@ -181,3 +181,45 @@ def test_env_reads_only_in_session():
                 ):
                     violations.append(f"{rel}:{node.lineno}")
     assert not violations, "\n".join(violations)
+
+
+DECLARER = os.path.join("functions", "audio.py")
+# Every decode pass in ``functions/`` reports per-row errors through these
+# two columns (the image and video passes too), so the names alone do not
+# mark a copy of the audio row.
+ERROR_CHANNEL = {"decode_ok", "error_kind"}
+
+
+def test_decode_columns_declared_once():
+    """The per-clip decode row is declared once, in ``functions/audio.py``:
+    a ``StructField`` named after a column the decode derives anywhere else
+    in the package is a second, hand-synced copy of that row.  Downstream
+    schemas (the facts row, the decode stage's output) derive from the one
+    declaration instead."""
+    from codeclone_spark.functions import audio
+    from codeclone_spark.plans.facts import DECODE_OUT_SCHEMA
+    from codeclone_spark.schema import CLIPS_SCHEMA
+
+    derived = set(DECODE_OUT_SCHEMA.names) - set(CLIPS_SCHEMA.names) - ERROR_CHANNEL
+    assert derived, "the decode row derives no columns"
+    violations = []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fn in sorted(files):
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG_ROOT)
+            if not fn.endswith(".py") or rel == DECLARER:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "id", getattr(node.func, "attr", None))
+                    == "StructField"
+                    and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value in derived
+                ):
+                    violations.append(f"{rel}:{node.lineno} {node.args[0].value}")
+    assert not violations, "\n".join(violations)
+    assert DECODE_OUT_SCHEMA is audio.DECODE_OUT_SCHEMA

@@ -18,13 +18,13 @@ import pandas as pd
 import pytest
 
 from codeclone_spark.functions.audio import (
+    DECODE_OUT_SCHEMA,
     MAX_CLIP_BYTES,
     STFT_HOP,
     STFT_WIN,
     decode_map_in_pandas,
     snr_map_in_pandas,
 )
-from codeclone_spark.plans.facts import DECODE_OUT_SCHEMA
 from codeclone_spark.synth import LOSSLESS_SNR_DB, encode_pcm
 
 SR = 16000
