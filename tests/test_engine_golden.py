@@ -21,6 +21,10 @@ def test_exit_code_gate_failure(tiny_run):
     assert tiny_run.exit_code == EXIT_GATE_FAILURE
 
 
+def test_gate_invariants(tiny_run, check_gate_invariants):
+    check_gate_invariants(tiny_run)
+
+
 def test_counts_match_planted_truth(tiny_run, tiny_manifest):
     by_rule = tiny_run.report["findings"]["by_rule"]
     pc = tiny_manifest["planted_counts"]
@@ -314,7 +318,9 @@ def test_schema_evolution_gate(spark, tiny_dir, tmp_path_factory):
     ]
 
 
-def test_suppression_directives(spark, tiny_dir, tmp_path_factory, tiny_manifest):
+def test_suppression_directives(
+    spark, tiny_dir, tmp_path_factory, tiny_manifest, check_gate_invariants
+):
     """A per-(rule, partition) suppression turns that gate green while the
     violation rows stay in the output and the suppressed count is reported
     (reference suppressions index semantics)."""
@@ -356,6 +362,7 @@ def test_suppression_directives(spark, tiny_dir, tmp_path_factory, tiny_manifest
     )
     failed2 = {f["rule_id"] for f in r2.report["findings"]["failed_gates"]}
     assert "audio:snr" not in failed2
+    check_gate_invariants(r2)
 
 
 def test_test_lane_is_informational(spark, tiny_dir, tmp_path_factory, tiny_manifest):

@@ -128,8 +128,9 @@ def accepted_baseline(spark, neardup_dir, tmp_path_factory):
     return base, r1
 
 
-def test_new_clusters_gate(accepted_baseline):
+def test_new_clusters_gate(accepted_baseline, check_gate_invariants):
     _, r1 = accepted_baseline
+    check_gate_invariants(r1)
     nd = r1.report["metrics"]["neardup"]
     assert nd["n_clusters"] == 2
     assert nd["n_new"] == 2 and nd["n_known"] == 0
@@ -204,7 +205,9 @@ def test_changed_cluster_regates_as_new(
     assert r.exit_code == EXIT_GATE_FAILURE
 
 
-def test_suppression_star_scope(spark, neardup_dir, tmp_path_factory):
+def test_suppression_star_scope(
+    spark, neardup_dir, tmp_path_factory, check_gate_invariants
+):
     # partition-scoped directives are rejected up front (clusters span
     # partitions; min(part) attribution is reporting-only)
     with pytest.raises(ValueError, match="table-scope"):
@@ -224,6 +227,7 @@ def test_suppression_star_scope(spark, neardup_dir, tmp_path_factory):
     failed = {g["rule_id"] for g in r.report["findings"]["failed_gates"]}
     assert NEARDUP_RULE_ID not in failed
     assert r.report["findings"]["suppressed_by_directive"] >= 2
+    check_gate_invariants(r)
 
 
 def test_stage_off_reports_nothing(tiny_run):
