@@ -40,10 +40,11 @@ connected component".
 Skew note: the doubling self-join keys on ``lbl``, which concentrates on
 the component minimum as clusters merge — a single giant component makes
 that one label the hottest possible key.  The join is many-to-one against
-the 1-row-per-id mapping side, so AQE's skew split handles it; probed by
+the 1-row-per-id mapping side, so the hot key costs its task one linear
+pass over its rows, never a product; probed by
 ``tests/test_graph_random.py::test_giant_component_hot_label_key`` (a
-~50k-node single component through the doubling path completes within a
-bounded factor of a uniform graph of the same edge count).
+~50k-node single component through the doubling path; its wall-clock
+bound against a uniform graph of the same edge count is an opt-in probe).
 
 The converged labels are ALWAYS materialized to *scratch_dir* and the
 returned frame reads from there: nothing stays persisted after the call
@@ -123,36 +124,46 @@ def connected_components(
     # each tiny round schedules cores-many near-empty tasks per exchange,
     # and task scheduling dominates the round (measured at sf1.0 / 950
     # edges on local[32]: 2.9 s -> 1.5 s for the whole CC).  Never raises
-    # the caller's setting; ~50k label rows per partition; AQE stays on,
-    # so genuinely skewed rounds still split.  Restored in the finally.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_sp = min(int(prev_sp), max(4, 2 * n_pairs // 50_000 + 1))
+    # the caller's setting; ~50k label rows per partition.  The width is
+    # applied by an explicit repartition on each loop frame, never through
+    # the session conf, which other threads' jobs read meanwhile.
+    loop_sp = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        max(4, 2 * n_pairs // 50_000 + 1),
+    )
     pinned: list[DataFrame] = []  # persisted handles, unpersisted on exit
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
-        return _cc_loop(
-            spark, raw, _truncate, max_iter, simple_rounds, pinned
-        )
+        return _cc_loop(raw, _truncate, max_iter, simple_rounds, pinned, loop_sp)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         for frame in pinned:
             frame.unpersist()
 
 
 def _cc_loop(
-    spark,
     raw: DataFrame,
     _truncate,
     max_iter: int,
     simple_rounds: int,
     pinned: list[DataFrame],
+    loop_sp: int,
 ) -> DataFrame:
     """Iteration body of :func:`connected_components` (split out so the
-    caller can scope the shuffle-width conf around the whole body)."""
-    und = (
-        raw.unionByName(raw.select(F.col("t").alias("s"), F.col("s").alias("t")))
-        .distinct()
-    )
+    caller can release every persisted frame in one ``finally``).
+
+    Every aggregation in the loop reads an explicit
+    ``repartition(loop_sp, key)`` on its grouping key, which sets its
+    shuffle width.  Joins are left to the planner: while the frames are
+    small enough for the narrow width to matter, their small side is
+    broadcast and needs no shuffle, and a repartition there would add
+    one."""
+
+    def _by(frame: DataFrame, key: str) -> DataFrame:
+        return frame.repartition(loop_sp, key)
+
+    und = _by(
+        raw.unionByName(raw.select(F.col("t").alias("s"), F.col("s").alias("t"))),
+        "s",
+    ).distinct()
     # Self-loops make one propagation round = "min over self + neighbors"
     # with a SINGLE reference to the label frame per round (linear plan;
     # a two-reference join + least-fallback formulation doubles the plan
@@ -178,7 +189,7 @@ def _cc_loop(
         "edges",
     ).persist()
     labels = (
-        e2.select(F.col("s").alias("id"))
+        _by(e2.select(F.col("s").alias("id")), "id")
         .distinct()
         .withColumn("lbl", F.col("id"))
         .persist()
@@ -202,7 +213,7 @@ def _cc_loop(
     pinned += [e2, labels]
     for rnd in range(max_iter):
         prop = (
-            e2.join(labels.select(F.col("id").alias("s"), "lbl"), "s")
+            _by(e2.join(labels.select(F.col("id").alias("s"), "lbl"), "s"), "t")
             .groupBy("t")
             .agg(F.min("lbl").alias("lbl"))
             .select(F.col("t").alias("id"), "lbl")

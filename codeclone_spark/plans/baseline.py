@@ -288,7 +288,9 @@ def write_accepted_sidecar(keys_df: Any, baseline_path: str) -> dict[str, Any]:
     return {"path": rel, "count": int(n), "sha256": sha}
 
 
-def _sidecar_files(root: str) -> list[str]:
+def parquet_files(root: str) -> list[str]:
+    """Sorted data files of the parquet dataset under *root*, hive
+    subdirectories included; ``_SUCCESS`` and hidden files skipped."""
     files = []
     for dirpath, _dirs, names in os.walk(root):
         for n in sorted(names):
@@ -320,7 +322,7 @@ def _verify_accepted_ref(
 
         h = hashlib.sha256()
         n = 0
-        for fp in _sidecar_files(root):
+        for fp in parquet_files(root):
             for batch in pq.ParquetFile(fp).iter_batches(columns=["vkey"]):
                 for k in batch.column(0).to_pylist():
                     if not _valid_vkey(k):

@@ -25,6 +25,7 @@ from typing import Any, Iterator
 
 from codeclone_spark import ENGINE_NAME, ENGINE_VERSION
 from codeclone_spark.operators.rules import TABLE_SCOPE, Rule, rule_spec
+from codeclone_spark.plans.baseline import parquet_files
 
 SARIF_VERSION = "2.1.0"
 SARIF_SCHEMA = "https://json.schemastore.org/sarif-2.1.0.json"
@@ -46,12 +47,7 @@ def _iter_violation_rows(violations_path: str) -> Iterator[dict[str, Any]]:
 
     import pyarrow.parquet as pq
 
-    files = []
-    for dirpath, _dirs, names in os.walk(violations_path):
-        for n in sorted(names):
-            if n.endswith(".parquet") and not n.startswith((".", "_")):
-                files.append(os.path.join(dirpath, n))
-    for fp in sorted(files):
+    for fp in parquet_files(violations_path):
         part_cols = {
             k: unquote(v)
             for seg in os.path.relpath(fp, violations_path).split(os.sep)[:-1]

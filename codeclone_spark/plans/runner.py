@@ -50,7 +50,6 @@ from codeclone_spark.operators.rules import (
     NEARDUP_RULE_ID,
     NUMERIC_STATS_COLUMNS,
     RULE_SEVERITY,
-    RULES,
     SCHEMA_RULE_IDS,
     TABLE_SCOPE,
     GateConfig,
@@ -179,9 +178,10 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
        and the exemplar cap (``_wave_violations``), partition partials
        (``_wave_partials``), then the ledger commit (``_ledger_entries``)
     4. table scope: exact uniqueness, the opt-in near-dup clusters
-       (``_neardup_stage``) and the known/new counts (``_gate_counts``)
+       (``_neardup_stage``) and the count table (``_gate_counts``)
     5. verdicts: the dense per-(partition, rule) grid plus the table-scope
-       drift, schema and near-dup verdicts
+       drift, schema and near-dup verdicts, and the review queue, all read
+       from the count table
     6. sinks (``_write_sinks``), the report (``_rule_digests``,
        ``_findings``, ``_stats_doc``, ``_seal_report``), then either the
        baseline update (``_update_baseline``) or the gate's exit code
@@ -290,11 +290,11 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     approx_ndv = ids_only.agg(
         F.approx_count_distinct("clip_id").alias("ndv")
     ).collect()[0]["ndv"]
-    # Persisted: the report phase runs three independent actions over this
-    # frame (review-queue top-k, violations write, verdicts write) and each
-    # would otherwise re-scan the full corpus ids and redo the dup groupBy;
-    # the frame itself is tiny (dup exemplars only).  Unpersisted after its
-    # last consumer, the baseline update.
+    # Persisted: the gate counts, the violations write and the baseline
+    # update each read this frame, and each would otherwise re-scan the
+    # full corpus ids and redo the dup groupBy; the frame itself is tiny
+    # (dup exemplars only).  Unpersisted after its last consumer, the
+    # baseline update.
     uniq_viol = evaluate_uniqueness(ids_only).persist()
 
     neardup_clusters = neardup_viol = None
@@ -327,7 +327,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         all_viol = all_viol.unionByName(neardup_viol)
 
     counts, n_suppressed_directive = _gate_counts(
-        spark, uniq_viol, acc_df, ledger, all_parts, neardup_metrics, directives
+        uniq_viol, acc_df, ledger, all_parts, neardup_metrics, directives
     )
     _mark("uniqueness_and_ndv")
 
@@ -341,7 +341,10 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     if cfg.test_lane_pattern:
         lane_rx = re.compile(cfg.test_lane_pattern)
         lane_parts = {p for p in all_parts if lane_rx.search(p)}
-    verdicts = build_verdicts(counts, part_rows, cfg.gates, lane_parts)
+    counts_df = local_frame(
+        spark, counts, "`partition` string, rule_id string, n_viol long, n_new long"
+    )
+    verdicts = build_verdicts(counts_df, part_rows, cfg.gates, lane_parts)
     quantiles_by_col = _table_quantiles(table_stats)
     drift_rows, drift_metrics = _drift_verdicts(
         cfg.gates, snapshot, table_stats, quantiles_by_col
@@ -352,7 +355,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     warnings += schema_warns
     table_rows = drift_rows + schema_rows
     if cfg.neardup_transcript:
-        table_rows.append(_neardup_verdict(cfg.gates, neardup_metrics, directives))
+        table_rows.append(_neardup_verdict(cfg.gates, neardup_metrics, counts))
     verdicts = verdicts.unionByName(local_frame(
         spark, table_rows,
         "`partition` string, rule_id string, pass boolean, reason string, "
@@ -362,10 +365,9 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
 
     # --- canonical, deterministically-ordered outputs
     violations_path, verdicts_path = _write_sinks(cfg, all_viol, verdicts)
-    counts.unpersist()
     _mark("final_writes")
 
-    exemplar_counts, run_digest = _rule_digests(spark.read.parquet(violations_path))
+    run_digest = _rule_digests(spark.read.parquet(violations_path))
     failed = [
         (r["partition"], r["rule_id"], r["reason"])
         for r in spark.read.parquet(verdicts_path)
@@ -373,9 +375,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         .orderBy("partition", "rule_id")
         .collect()
     ]
-    findings = _findings(
-        ledger, all_parts, exemplar_counts, n_suppressed_directive, failed
-    )
+    findings = _findings(ledger, all_parts, counts, n_suppressed_directive, failed)
     stats_doc, histograms = _stats_doc(table_stats, quantiles_by_col)
     metrics = {
         "stats": stats_doc,
@@ -572,9 +572,12 @@ def _wave_violations(
 
     # Independent consumers of the cached viol frame (stats collect +
     # exemplar write): overlap them so the second job back-fills the
-    # first's tail (guide §2.6).  Both may race to fill the persist;
-    # the block manager's per-partition compute locks make that safe
-    # (one task computes a partition, the other blocks then reads).
+    # first's tail (guide §2.6).  If both compute the same partition of
+    # the persist (say on two executors), they still cannot disagree:
+    # rows tied on (clip_id, observed) within one (rule_id, partition)
+    # are identical in every written column, because expected and
+    # severity are per-rule literals, so whichever tied copy the cap
+    # keeps, the written rows and the digest are the same.
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_stats = pool.submit(_collect_rule_stats)
         f_write = pool.submit(_write_exemplars)
@@ -808,24 +811,35 @@ def _neardup_stage(
 
 
 def _gate_counts(
-    spark: SparkSession, uniq_viol: DataFrame, acc_df: DataFrame, ledger: Ledger,
-    all_parts: list[str], neardup_metrics: dict[str, Any],
-    directives: list[tuple[str, str]],
-) -> tuple[DataFrame, int]:
-    """Per-(partition, rule) ``n_viol``/``n_new`` counts, persisted, and the
-    number of new violations suppression directives turned into debt.
+    uniq_viol: DataFrame, acc_df: DataFrame, ledger: Ledger, all_parts: list[str],
+    neardup_metrics: dict[str, Any], directives: list[tuple[str, str]],
+) -> tuple[list[tuple[str, str, int, int]], int]:
+    """The run's count table and the number of new violations suppression
+    directives turned into debt.
 
-    Row-rule counts come from the ledger's TRUE tallies (aggregated before
-    the exemplar cap in the wave pass); only the table-scope uniqueness
-    rule — which never passes through a wave — is diffed here (broadcast
-    anti-join, the reference's diff_clone_groups set difference,
-    baseline/diff.py:23-32).  Near-dup rows never enter the vkey accepted
-    set: their acceptance lives in the baseline `clones` section keyed
-    "<min_id>|<size>" (a vkey lacks the size, so a grown cluster would
-    silently stay accepted), so the stage contributes its own counts row."""
+    The table is one ``(partition, rule_id, n_viol, n_new)`` tuple per
+    (partition, rule) cell with a violation, already net of directives.
+    The verdict grid, the near-dup verdict, the review queue and the
+    findings totals all read it.  It is as large as the ledger's rule
+    counts, which the driver holds anyway.  Its cells come from:
+
+    - row rules: the ledger's TRUE tallies, aggregated before the exemplar
+      cap in the wave pass
+    - ``uniq:clip_id``, which never passes through a wave: diffed here
+      against the accepted keys (the reference's diff_clone_groups set
+      difference, baseline/diff.py:23-32) and collected from the groupBy
+    - near-dup clusters: one TABLE_SCOPE cell from the stage's metrics.
+      Their acceptance lives in the baseline `clones` section keyed
+      "<min_id>|<size>" (a vkey lacks the size, so a grown cluster would
+      silently stay accepted).  The dense verdict grid drops this cell
+      (TABLE_SCOPE is not a partition); ``_neardup_verdict`` reads it.
+
+    A directive zeroes ``n_new`` of every cell it matches: a gate-level
+    allowlist, the violation rows stay in the output."""
     uniq_keyed = uniq_viol.withColumn("vkey", violation_key(uniq_viol))
-    uniq_counts = (
-        uniq_keyed.join(acc_df, "vkey", "left")
+    cells = sorted(
+        (r["partition"], r["rule_id"], int(r["n_viol"]), int(r["n_new"]))
+        for r in uniq_keyed.join(acc_df, "vkey", "left")
         .groupBy("partition", "rule_id")
         .agg(
             F.count(F.lit(1)).alias("n_viol"),
@@ -833,8 +847,9 @@ def _gate_counts(
                 F.when(F.col("accepted").isNull(), 1).otherwise(0)
             ).alias("n_new"),
         )
+        .collect()
     )
-    row_count_tuples = [
+    cells += [
         (p, rid, int(nv), int(nn))
         for p in all_parts
         if p in ledger.partitions
@@ -842,46 +857,21 @@ def _gate_counts(
             ledger.partitions[p].get("rule_counts", {}).items()
         )
     ]
-    counts_schema = "`partition` string, rule_id string, n_viol long, n_new long"
-    counts = uniq_counts.unionByName(
-        local_frame(spark, row_count_tuples, counts_schema)
-    )
     if neardup_metrics:
-        # joins the counts frame so suppression directives and the review
-        # queue treat clusters like any other finding; the dense verdict
-        # grid drops the row (TABLE_SCOPE is not a partition) — the rule's
-        # single table-scope verdict comes from _neardup_verdict
-        nd_row = (
+        cells.append((
             TABLE_SCOPE,
             NEARDUP_RULE_ID,
             neardup_metrics["n_clusters"],
             neardup_metrics["n_new"],
-        )
-        counts = counts.unionByName(local_frame(spark, [nd_row], counts_schema))
-
-    # suppression directives: zero n_new for matching (rule, partition)
-    # pairs (gate-level allowlist; the violation rows stay in the output)
+        ))
+    counts: list[tuple[str, str, int, int]] = []
     n_suppressed = 0
-    if directives:
-        match = None
-        for rid, part in directives:
-            m = (F.col("rule_id") == rid) & (
-                F.lit(part == "*") | (F.col("partition") == part)
-            )
-            match = m if match is None else (match | m)
-        counts = counts.withColumn(
-            "_supp", F.when(match, F.col("n_new")).otherwise(F.lit(0))
-        ).withColumn("n_new", F.col("n_new") - F.col("_supp"))
-        n_suppressed = int(
-            counts.agg(F.sum("_supp").alias("s")).collect()[0]["s"] or 0
-        )
-        counts = counts.drop("_supp")
-
-    # counts feeds the review queue, the dense verdict grid and the gate
-    # arithmetic — three actions; persist the (partition, rule)-sized frame
-    # so the uniq_counts join/groupBy lineage runs once (unpersisted after
-    # the final writes).
-    return counts.persist(), n_suppressed
+    for part, rid, n_viol, n_new in cells:
+        if any(d == rid and d_part in ("*", part) for d, d_part in directives):
+            n_suppressed += n_new
+            n_new = 0
+        counts.append((part, rid, n_viol, n_new))
+    return counts, n_suppressed
 
 
 def _table_quantiles(table_stats: dict[str, Any]) -> dict[str, dict[str, Any]]:
@@ -987,15 +977,14 @@ def _schema_verdicts(
 
 def _neardup_verdict(
     gates: GateConfig, neardup_metrics: dict[str, Any],
-    directives: list[tuple[str, str]],
+    counts: list[tuple[str, str, int, int]],
 ) -> tuple:
     """ONE table-scope near-dup verdict, failing on NEW clusters (reference
-    fail_on_new semantics, surfaces/cli/execution.py).  A '*'-scoped
-    suppression directive converts new clusters to accepted debt exactly
-    like the counts-frame rules (already tallied by ``_gate_counts``)."""
+    fail_on_new semantics, surfaces/cli/execution.py).  The new count is
+    the count table's near-dup cell, so a '*'-scoped suppression directive
+    has already turned new clusters into accepted debt."""
     nd_n, nd_new = neardup_metrics["n_clusters"], neardup_metrics["n_new"]
-    nd_supp = (NEARDUP_RULE_ID, "*") in directives
-    nd_eff = 0 if nd_supp else nd_new
+    nd_eff = next(nn for _p, rid, _nv, nn in counts if rid == NEARDUP_RULE_ID)
     nd_budget, _ = gates.budget(NEARDUP_RULE_ID)
     nd_ok = nd_budget is None or nd_eff <= nd_budget
     if nd_ok and nd_n == 0:
@@ -1003,7 +992,7 @@ def _neardup_verdict(
     elif nd_ok:
         reason = (
             f"{NEARDUP_RULE_ID}: ok ({nd_n} cluster(s), {nd_eff} new"
-            + (", suppressed by directive" if nd_supp and nd_new else "")
+            + (", suppressed by directive" if nd_eff < nd_new else "")
             + ", within budget)"
         )
     else:
@@ -1015,40 +1004,31 @@ def _neardup_verdict(
     return (TABLE_SCOPE, NEARDUP_RULE_ID, nd_ok, reason, novelty)
 
 
-def _review_queue(counts: DataFrame) -> list[dict[str, Any]]:
-    """Derived triage queue: top-k (partition, rule) cells ranked by
-    severity-weighted NEW-violation count (reference review-queue / hotlist
-    surfaces, report/suggestions.py + report/document/derived.py, sorted
-    (-count, id) like _findings_groups.py:231).  Computed as a distributed
-    priority top-k over the counts frame — already net of suppression
-    directives, so accepted/allowlisted debt never ranks."""
-    w_map = F.create_map(
-        *[
-            x
-            for rid, sev in sorted(RULE_SEVERITY.items())
-            for x in (F.lit(rid), F.lit(_SEV_WEIGHT.get(sev, 3)))
-        ]
-    )
-    rq_rows = (
-        counts.filter(F.col("n_new") > 0)
-        .withColumn(
-            "score",
-            F.coalesce(w_map[F.col("rule_id")], F.lit(3)) * F.col("n_new"),
-        )
-        .orderBy(F.desc("score"), "partition", "rule_id")
-        .limit(REVIEW_QUEUE_K)
-        .collect()
-    )
+def _review_queue(counts: list[tuple[str, str, int, int]]) -> list[dict[str, Any]]:
+    """Derived triage queue: the top-k (partition, rule) cells of the count
+    table ranked by severity-weighted NEW-violation count (reference
+    review-queue / hotlist surfaces, report/suggestions.py +
+    report/document/derived.py, sorted (-count, id) like
+    _findings_groups.py:231).  A driver-side sort of the count table, which
+    is already net of suppression directives, so accepted/allowlisted debt
+    never ranks.  Python orders ``str`` by code point, as Spark's binary
+    string order does."""
+    scored = [
+        (_SEV_WEIGHT.get(RULE_SEVERITY.get(rid, "error"), 3) * n_new, part, rid, n_new)
+        for part, rid, _n_viol, n_new in counts
+        if n_new > 0
+    ]
+    scored.sort(key=lambda c: (-c[0], c[1], c[2]))
     return [
         {
-            "partition": r["partition"],
-            "rule_id": r["rule_id"],
-            "n_new": int(r["n_new"]),
-            "severity": RULE_SEVERITY.get(r["rule_id"], "error"),
-            "score": int(r["score"]),
-            "action": rule_spec(r["rule_id"]).action,
+            "partition": part,
+            "rule_id": rid,
+            "n_new": n_new,
+            "severity": RULE_SEVERITY.get(rid, "error"),
+            "score": score,
+            "action": rule_spec(rid).action,
         }
-        for r in rq_rows
+        for score, part, rid, n_new in scored[:REVIEW_QUEUE_K]
     ]
 
 
@@ -1097,44 +1077,36 @@ def _write_sinks(
     return violations_path, verdicts_path
 
 
-def _rule_digests(final_viol: DataFrame) -> tuple[dict[str, int], str]:
-    """Per-rule exemplar row counts and the run digest.  ONE aggregation
-    serves both: per-rule (count, digest-over-sorted-rows), folded into a
-    global digest on the driver."""
+def _rule_digests(final_viol: DataFrame) -> str:
+    """The run digest: per-rule digests over the sorted rows, folded on the
+    driver, so it is independent of the sink layout."""
     row = F.concat_ws("|", "rule_id", "partition", "clip_id", "observed")
     rule_rows = final_viol.groupBy("rule_id").agg(
-        F.count(F.lit(1)).alias("n"),
         F.sha2(F.concat_ws(";", F.sort_array(F.collect_list(row))), 256).alias(
             "digest"
         ),
     ).collect()
     folded = ";".join(sorted(f"{r['rule_id']}:{r['digest']}" for r in rule_rows))
-    run_digest = hashlib.sha256(folded.encode()).hexdigest()
-    return {r["rule_id"]: r["n"] for r in rule_rows}, run_digest
+    return hashlib.sha256(folded.encode()).hexdigest()
 
 
 def _findings(
-    ledger: Ledger, all_parts: list[str], exemplar_counts: dict[str, int],
+    ledger: Ledger, all_parts: list[str], counts: list[tuple[str, str, int, int]],
     n_suppressed_directive: int, failed: list[tuple[str, str, str]],
 ) -> dict[str, Any]:
-    """The report's ``findings`` section.  True totals: ledger tallies
-    (pre-cap) for row rules + the uncapped table-scope rows (uniqueness,
-    one row per near-dup cluster) from the written output."""
+    """The report's ``findings`` section.  True totals: the count table's
+    per-rule ``n_viol`` (pre-cap for row rules, one per duplicate group or
+    near-dup cluster for the table-scope rules)."""
     rule_counts: dict[str, int] = {}
-    for p in all_parts:
-        for rid, (nv, _nn) in ledger.partitions.get(p, {}).get(
-            "rule_counts", {}
-        ).items():
-            rule_counts[rid] = rule_counts.get(rid, 0) + int(nv)
-    for r in RULES:
-        if r.scope in CROSS_PARTITION_SCOPES and r.rule_id in exemplar_counts:
-            rule_counts[r.rule_id] = exemplar_counts[r.rule_id]
+    for _part, rid, n_viol, _n_new in counts:
+        if n_viol:
+            rule_counts[rid] = rule_counts.get(rid, 0) + n_viol
     by_severity: dict[str, int] = {}
     for rid, n in rule_counts.items():
         sev = RULE_SEVERITY.get(rid, "error")
-        by_severity[sev] = by_severity.get(sev, 0) + int(n)
+        by_severity[sev] = by_severity.get(sev, 0) + n
     return {
-        "total_violations": int(sum(rule_counts.values())),
+        "total_violations": sum(rule_counts.values()),
         # exemplar rows beyond the per-(rule, partition) cap are counted
         # here, never silently dropped (reference suppressed_* counts)
         "suppressed_exemplars": sum(

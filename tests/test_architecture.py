@@ -183,6 +183,32 @@ def test_env_reads_only_in_session():
     assert not violations, "\n".join(violations)
 
 
+def test_session_conf_written_only_in_session():
+    """Session conf is written in one place, the session factory: a
+    ``conf.set`` deeper in the package changes a setting every other
+    thread's jobs on the shared session read meanwhile (the runner runs
+    stages on thread pools).  Size a stage's shuffles on its own frames."""
+    violations = []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fn in sorted(files):
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG_ROOT)
+            if not fn.endswith(".py") or rel == ENV_READER:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("set", "unset")
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "conf"
+                ):
+                    violations.append(f"{rel}:{node.lineno}")
+    assert not violations, "\n".join(violations)
+
+
 DECLARER = os.path.join("functions", "audio.py")
 # Every decode pass in ``functions/`` reports per-row errors through these
 # two columns (the image and video passes too), so the names alone do not

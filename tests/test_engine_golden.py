@@ -4,6 +4,7 @@ tests/test_detector_golden.py:50-71)."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
@@ -11,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from codeclone_spark import EXIT_CONTRACT_ERROR, EXIT_GATE_FAILURE, EXIT_OK
+from codeclone_spark.plans.ledger import Ledger
 from codeclone_spark.plans.runner import RunConfig, run
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "tiny_violations.json")
@@ -208,6 +210,33 @@ def test_exemplar_cap_preserves_true_counts(spark, tiny_dir, tmp_path_factory, t
     )
     assert over == 0
     assert res.exit_code == EXIT_GATE_FAILURE
+    # Each ledger entry's digest and suppressed count are what the rows its
+    # wave wrote give: the stats collect and the exemplar write that share
+    # the wave's cached frame saw the same capped rows.
+    ledger = Ledger(os.path.join(out, "ledger"))
+    for part in sorted(p for p in ledger.partitions if not p.startswith("\x00")):
+        entry = ledger.partitions[part]
+        rows = (
+            spark.read.parquet(os.path.join(out, "waves", entry["wave"], "violations"))
+            .filter(F.col("partition") == part)
+            .collect()
+        )
+        kept: dict[str, list[str]] = {rid: [] for rid in entry["rule_counts"]}
+        for r in rows:
+            # concat_ws skips nulls (a null clip_id)
+            fields = (r["rule_id"], r["clip_id"], r["observed"])
+            kept[r["rule_id"]].append("|".join(x for x in fields if x is not None))
+        rule_digests = sorted(
+            f"{rid}:{hashlib.sha256(';'.join(sorted(v)).encode()).hexdigest()}"
+            for rid, v in kept.items()
+        )
+        digest = (
+            hashlib.sha256(";".join(rule_digests).encode()).hexdigest()
+            if rule_digests else "0" * 64
+        )
+        assert entry["digest"] == digest, part
+        n_viol = sum(nv for nv, _nn in entry["rule_counts"].values())
+        assert entry["suppressed"] == n_viol - len(rows), part
 
 
 def test_zero_row_partition_resumes(spark, tiny_dir, tmp_path_factory, tmp_path):

@@ -12,11 +12,16 @@ phase (parquet-truncated lineage, the code path fixtures never reach).
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
 
 from codeclone_spark.operators.graph import connected_components, keep_list
+
+# Wall-clock assertions are opt-in probes: set TIMING_PROBES=1 to run them.
+# On a shared host their ratios track CPU steal, not the code under test.
+TIMING_PROBES = bool(os.environ.get("TIMING_PROBES"))
 
 
 def _uf_components(edges: list[tuple[str, str]]) -> dict[str, str]:
@@ -158,16 +163,22 @@ def test_empty_edge_frames(spark, tmp_path):
     assert out2.count() == 0
 
 
-def test_giant_component_hot_label_key(spark, tmp_path):
+def test_giant_component_hot_label_key(spark, tmp_path, monkeypatch):
     """Skew probe for the pointer-doubling self-join (graph.py joins on
     ``lbl``, which concentrates on the component minimum as clusters
     merge): one giant ~50k-node component plus uniform background must
-    complete through the doubling path (simple_rounds=0) without the hot
-    label key stalling a round — bounded relative to a same-size uniform
-    graph — and still label every node with the component minimum."""
+    complete through the doubling path (simple_rounds=0) and label every
+    node with the component minimum, without writing session conf.  With
+    TIMING_PROBES set it also bounds the hot run's wall against a
+    same-size uniform graph, so the hot label key cannot stall a round."""
     import time
 
     from pyspark.sql import functions as F
+
+    conf_writes: list[tuple] = []
+    conf_type = type(spark.conf)
+    monkeypatch.setattr(conf_type, "set", lambda _s, *a: conf_writes.append(a))
+    monkeypatch.setattr(conf_type, "unset", lambda _s, *a: conf_writes.append(a))
 
     n = 50_000
     # giant star: every node joined to node 0 -> after one propagation all
@@ -202,6 +213,9 @@ def test_giant_component_hot_label_key(spark, tmp_path):
     t_hot = time.monotonic() - t0
     assert bad == 0
     assert g_out.count() == (n - 1) + 1 + 2 * ((n - 1 + 1) // 2)
-    # hot-key run processes ~2x the edges; allow generous scheduling noise
-    # but fail if the hot label key degrades a round into a straggler wall
-    assert t_hot < 10 * max(t_uniform, 1.0), (t_hot, t_uniform)
+    assert conf_writes == []
+    if TIMING_PROBES:
+        # hot-key run processes ~2x the edges; allow generous scheduling
+        # noise but fail if the hot label key degrades a round into a
+        # straggler wall
+        assert t_hot < 10 * max(t_uniform, 1.0), (t_hot, t_uniform)

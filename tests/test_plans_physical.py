@@ -241,7 +241,7 @@ def test_local_frame_matches_create_dataframe(spark):
 
 def test_runner_driver_frames_are_local_relations(spark, tiny_dir, tiny_run):
     """The run's driver-built frames (inline accepted keys, the verdict
-    grid's rule list, the ledger-count tuples) are local relations: an
+    grid's rule list, the count table) are local relations: an
     ``ExistingRDD`` leaf would pickle them through Python workers on every
     action that reads them."""
     from codeclone_spark.operators.rules import (
@@ -251,6 +251,7 @@ def test_runner_driver_frames_are_local_relations(spark, tiny_dir, tiny_run):
     )
     from codeclone_spark.plans.ledger import Ledger
     from codeclone_spark.plans.runner import RunConfig, _accepted_keys, _gate_counts
+    from codeclone_spark.schema import local_frame
 
     out_dir = os.path.dirname(tiny_run.violations_path)
     cfg = RunConfig(data_dir=tiny_dir, out_dir=out_dir)
@@ -259,21 +260,22 @@ def test_runner_driver_frames_are_local_relations(spark, tiny_dir, tiny_run):
     all_parts = sorted(ledger.partitions)
     ids_only = read_clips(spark, tiny_dir).select("clip_id", "part")
     counts, _ = _gate_counts(
-        spark, evaluate_uniqueness(ids_only), acc_df, ledger, all_parts,
+        evaluate_uniqueness(ids_only), acc_df, ledger, all_parts,
         {"n_clusters": 1, "n_new": 1}, [],
     )
-    try:
-        part_rows = spark.range(len(all_parts)).select(
-            F.concat(F.lit("p"), F.col("id").cast("string")).alias("part"),
-            F.lit(1).cast("long").alias("rows"),
-        )
-        verdicts = build_verdicts(counts, part_rows, GateConfig())
-        for df in (acc_df, counts, verdicts):
-            body = _plan(df, "simple").split("== Physical Plan ==")[-1]
-            assert "ExistingRDD" not in body
-            assert "LocalTableScan" in body
-    finally:
-        counts.unpersist()
+    assert ("<table>", "neardup:transcript", 1, 1) in counts
+    part_rows = spark.range(len(all_parts)).select(
+        F.concat(F.lit("p"), F.col("id").cast("string")).alias("part"),
+        F.lit(1).cast("long").alias("rows"),
+    )
+    counts_df = local_frame(
+        spark, counts, "`partition` string, rule_id string, n_viol long, n_new long"
+    )
+    verdicts = build_verdicts(counts_df, part_rows, GateConfig())
+    for df in (acc_df, verdicts):
+        body = _plan(df, "simple").split("== Physical Plan ==")[-1]
+        assert "ExistingRDD" not in body
+        assert "LocalTableScan" in body
 
 
 def test_runs_leave_nothing_persisted(spark, tiny_dir, tmp_path):
@@ -294,3 +296,27 @@ def test_runs_leave_nothing_persisted(spark, tiny_dir, tmp_path):
     ):
         run(spark, RunConfig(data_dir=tiny_dir, out_dir=str(tmp_path / name), **kw))
         assert persisted() <= before, name
+
+
+# Spark jobs one tiny gated run() launches.  A ratchet: lower it when a
+# change removes jobs; a change that adds jobs raises it and says why.
+RUN_JOB_BUDGET = 48
+
+
+def test_run_job_budget(spark, tiny_dir, tiny_run, tmp_path):
+    """Counts the jobs of one tiny ``run()`` by job-id range in the status
+    store (the runner's pooled threads set no job group to count by)."""
+    from codeclone_spark.plans.runner import RunConfig, run
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest_job() -> int:
+        sc.listenerBus().waitUntilEmpty()  # job starts reach the store async
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return int(jobs.apply(0).jobId()) if jobs.size() else -1
+
+    mark = newest_job()
+    run(spark, RunConfig(data_dir=tiny_dir, out_dir=str(tmp_path / "out")))
+    n_jobs = newest_job() - mark
+    print(f"run() jobs: {n_jobs}")
+    assert n_jobs <= RUN_JOB_BUDGET, n_jobs
