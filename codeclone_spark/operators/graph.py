@@ -40,11 +40,10 @@ connected component".
 Skew note: the doubling self-join keys on ``lbl``, which concentrates on
 the component minimum as clusters merge — a single giant component makes
 that one label the hottest possible key.  The join is many-to-one against
-the 1-row-per-id mapping side, so the hot key costs its task one linear
-pass over its rows, never a product; probed by
+the 1-row-per-id mapping side, so AQE's skew split handles it; probed by
 ``tests/test_graph_random.py::test_giant_component_hot_label_key`` (a
-~50k-node single component through the doubling path; its wall-clock
-bound against a uniform graph of the same edge count is an opt-in probe).
+~50k-node single component through the doubling path; an opt-in timing
+probe bounds it against a uniform graph of the same edge count).
 
 The converged labels are ALWAYS materialized to *scratch_dir* and the
 returned frame reads from there: nothing stays persisted after the call
@@ -124,9 +123,9 @@ def connected_components(
     # each tiny round schedules cores-many near-empty tasks per exchange,
     # and task scheduling dominates the round (measured at sf1.0 / 950
     # edges on local[32]: 2.9 s -> 1.5 s for the whole CC).  Never raises
-    # the caller's setting; ~50k label rows per partition.  The width is
-    # applied by an explicit repartition on each loop frame, never through
-    # the session conf, which other threads' jobs read meanwhile.
+    # the caller's setting; ~50k label rows per partition.  Applied by
+    # repartitions in the loop, never through the session conf, which
+    # other threads' jobs read meanwhile.
     loop_sp = min(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         max(4, 2 * n_pairs // 50_000 + 1),
@@ -150,20 +149,15 @@ def _cc_loop(
     """Iteration body of :func:`connected_components` (split out so the
     caller can release every persisted frame in one ``finally``).
 
-    Every aggregation in the loop reads an explicit
-    ``repartition(loop_sp, key)`` on its grouping key, which sets its
-    shuffle width.  Joins are left to the planner: while the frames are
-    small enough for the narrow width to matter, their small side is
-    broadcast and needs no shuffle, and a repartition there would add
-    one."""
-
-    def _by(frame: DataFrame, key: str) -> DataFrame:
-        return frame.repartition(loop_sp, key)
-
-    und = _by(
-        raw.unionByName(raw.select(F.col("t").alias("s"), F.col("s").alias("t"))),
-        "s",
-    ).distinct()
+    Each aggregation reads a ``repartition(loop_sp, key)`` on its grouping
+    key, which sets its shuffle width.  Joins are left to the planner:
+    while the frames are small enough for the narrow width to matter, it
+    broadcasts their small side, and a repartition would add a shuffle."""
+    und = (
+        raw.unionByName(raw.select(F.col("t").alias("s"), F.col("s").alias("t")))
+        .repartition(loop_sp, "s")
+        .distinct()
+    )
     # Self-loops make one propagation round = "min over self + neighbors"
     # with a SINGLE reference to the label frame per round (linear plan;
     # a two-reference join + least-fallback formulation doubles the plan
@@ -189,7 +183,8 @@ def _cc_loop(
         "edges",
     ).persist()
     labels = (
-        _by(e2.select(F.col("s").alias("id")), "id")
+        e2.select(F.col("s").alias("id"))
+        .repartition(loop_sp, "id")
         .distinct()
         .withColumn("lbl", F.col("id"))
         .persist()
@@ -213,7 +208,8 @@ def _cc_loop(
     pinned += [e2, labels]
     for rnd in range(max_iter):
         prop = (
-            _by(e2.join(labels.select(F.col("id").alias("s"), "lbl"), "s"), "t")
+            e2.join(labels.select(F.col("id").alias("s"), "lbl"), "s")
+            .repartition(loop_sp, "t")
             .groupBy("t")
             .agg(F.min("lbl").alias("lbl"))
             .select(F.col("t").alias("id"), "lbl")

@@ -180,8 +180,8 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     4. table scope: exact uniqueness, the opt-in near-dup clusters
        (``_neardup_stage``) and the count table (``_gate_counts``)
     5. verdicts: the dense per-(partition, rule) grid plus the table-scope
-       drift, schema and near-dup verdicts, and the review queue, all read
-       from the count table
+       drift, schema and near-dup verdicts, and the review queue; the grid,
+       the near-dup verdict and the queue read the count table
     6. sinks (``_write_sinks``), the report (``_rule_digests``,
        ``_findings``, ``_stats_doc``, ``_seal_report``), then either the
        baseline update (``_update_baseline``) or the gate's exit code
@@ -818,7 +818,8 @@ def _gate_counts(
     directives turned into debt.
 
     The table is one ``(partition, rule_id, n_viol, n_new)`` tuple per
-    (partition, rule) cell with a violation, already net of directives.
+    (partition, rule) cell with a violation, plus the near-dup cell when
+    that stage ran, already net of directives.
     The verdict grid, the near-dup verdict, the review queue and the
     findings totals all read it.  It is as large as the ledger's rule
     counts, which the driver holds anyway.  Its cells come from:
@@ -828,7 +829,8 @@ def _gate_counts(
     - ``uniq:clip_id``, which never passes through a wave: diffed here
       against the accepted keys (the reference's diff_clone_groups set
       difference, baseline/diff.py:23-32) and collected from the groupBy
-    - near-dup clusters: one TABLE_SCOPE cell from the stage's metrics.
+    - near-dup clusters: one TABLE_SCOPE cell from the stage's metrics,
+      zero clusters included.
       Their acceptance lives in the baseline `clones` section keyed
       "<min_id>|<size>" (a vkey lacks the size, so a grown cluster would
       silently stay accepted).  The dense verdict grid drops this cell

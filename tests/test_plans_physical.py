@@ -318,5 +318,4 @@ def test_run_job_budget(spark, tiny_dir, tiny_run, tmp_path):
     mark = newest_job()
     run(spark, RunConfig(data_dir=tiny_dir, out_dir=str(tmp_path / "out")))
     n_jobs = newest_job() - mark
-    print(f"run() jobs: {n_jobs}")
     assert n_jobs <= RUN_JOB_BUDGET, n_jobs
