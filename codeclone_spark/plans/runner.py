@@ -1099,16 +1099,16 @@ def _findings(
     """The report's ``findings`` section.  True totals: the count table's
     per-rule ``n_viol`` (pre-cap for row rules, one per duplicate group or
     near-dup cluster for the table-scope rules)."""
-    rule_counts: dict[str, int] = {}
+    by_rule: dict[str, int] = {}
     for _part, rid, n_viol, _n_new in counts:
         if n_viol:
-            rule_counts[rid] = rule_counts.get(rid, 0) + n_viol
+            by_rule[rid] = by_rule.get(rid, 0) + n_viol
     by_severity: dict[str, int] = {}
-    for rid, n in rule_counts.items():
+    for rid, n in by_rule.items():
         sev = RULE_SEVERITY.get(rid, "error")
         by_severity[sev] = by_severity.get(sev, 0) + n
     return {
-        "total_violations": sum(rule_counts.values()),
+        "total_violations": sum(by_rule.values()),
         # exemplar rows beyond the per-(rule, partition) cap are counted
         # here, never silently dropped (reference suppressed_* counts)
         "suppressed_exemplars": sum(
@@ -1116,7 +1116,7 @@ def _findings(
         ),
         # new violations allowlisted by suppression directives
         "suppressed_by_directive": int(n_suppressed_directive),
-        "by_rule": dict(sorted(rule_counts.items())),
+        "by_rule": dict(sorted(by_rule.items())),
         "by_severity": dict(sorted(by_severity.items())),
         "failed_gates": [
             {"partition": p, "rule_id": r, "reason": reason} for p, r, reason in failed
