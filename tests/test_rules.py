@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from codeclone_spark.operators.rules import (
@@ -253,3 +254,88 @@ def test_gate_count_only_config_ignores_permille(spark):
     g = GateConfig(max_count={"audio:snr": 5})
     v = {r["rule_id"]: r for r in build_verdicts(counts, part_rows, g).collect()}
     assert v["audio:snr"]["pass"]
+
+
+_UNSET_FAIL = "exceed budget (max_count=0, max_permille=unset)"
+
+# (gates, rule_id, n_viol, n_new, rows, in_lane) -> (pass, reason, novelty).
+# Literal reasons: they reach report_sha256 through failed_gates and the
+# golden report text, so the permille and budget renderings are pinned
+# (HALF_UP rounding, Java double-to-string forms such as 3.0E-4).
+VERDICT_CASES = {
+    "zero_cell": (
+        GateConfig(), "audio:snr", 0, 0, 100, False,
+        (True, "audio:snr: ok (0 violations)", "known"),
+    ),
+    "within_budget": (
+        GateConfig(max_count={"audio:snr": 5}), "audio:snr", 3, 3, 100, False,
+        (True, "audio:snr: ok (3 violation(s), 3 new, within budget)", "new"),
+    ),
+    "count_fail": (
+        GateConfig(), "audio:snr", 2, 2, 100, False,
+        (False, f"audio:snr: 2 new violation(s) (20.0 permille) {_UNSET_FAIL}",
+         "new"),
+    ),
+    "permille_fail": (
+        GateConfig(max_permille={"audio:snr": 0.0003}),
+        "audio:snr", 4, 4, 10_000_000, False,
+        (False, "audio:snr: 4 new violation(s) (0.0 permille) exceed budget "
+         "(max_count=unset, max_permille=3.0E-4)", "new"),
+    ),
+    "half_up": (
+        GateConfig(), "audio:snr", 1, 1, 80_000, False,
+        (False, f"audio:snr: 1 new violation(s) (0.013 permille) {_UNSET_FAIL}",
+         "new"),
+    ),
+    "thirty_permille": (
+        GateConfig(max_count={"audio:snr": 5}, max_permille={"audio:snr": 10.0}),
+        "audio:snr", 3, 3, 100, False,
+        (False, "audio:snr: 3 new violation(s) (30.0 permille) exceed budget "
+         "(max_count=5, max_permille=10.0)", "new"),
+    ),
+    "large_budget": (
+        GateConfig(max_count={"audio:snr": 0}, max_permille={"audio:snr": 1e7}),
+        "audio:snr", 1, 1, 100, False,
+        (False, "audio:snr: 1 new violation(s) (10.0 permille) exceed budget "
+         "(max_count=0, max_permille=1.0E7)", "new"),
+    ),
+    "no_rows": (
+        GateConfig(), "uniq:clip_id", 20_000, 20_000, 0, False,
+        (False, f"uniq:clip_id: 20000 new violation(s) (2.0E7 permille) "
+         f"{_UNSET_FAIL}", "new"),
+    ),
+    "accepted_only": (
+        GateConfig(), "uniq:clip_id", 1, 0, 100, False,
+        (True, "uniq:clip_id: ok (1 violation(s), 0 new, within budget)",
+         "known"),
+    ),
+    "lane_row_rule": (
+        GateConfig(), "audio:snr", 2, 2, 100, True,
+        (True, "test-lane (informational): audio:snr: 2 new violation(s) "
+         f"(20.0 permille) {_UNSET_FAIL}", "new"),
+    ),
+    "lane_table_rule": (
+        GateConfig(), "uniq:clip_id", 1, 1, 100, True,
+        (False, f"uniq:clip_id: 1 new violation(s) (10.0 permille) {_UNSET_FAIL}",
+         "new"),
+    ),
+}
+
+
+def _verdict(spark, gates, rule_id, n_viol, n_new, rows, in_lane):
+    counts = spark.createDataFrame(
+        [("p1", rule_id, n_viol, n_new)], ["partition", "rule_id", "n_viol", "n_new"]
+    )
+    part_rows = spark.createDataFrame([("p1", rows)], ["part", "rows"])
+    lane = {"p1"} if in_lane else None
+    (r,) = [
+        r for r in build_verdicts(counts, part_rows, gates, lane).collect()
+        if r["rule_id"] == rule_id
+    ]
+    return (r["pass"], r["reason"], r["novelty"])
+
+
+@pytest.mark.parametrize("case", sorted(VERDICT_CASES))
+def test_gate_verdict_literals(spark, case):
+    *cell, want = VERDICT_CASES[case]
+    assert _verdict(spark, *cell) == want
