@@ -208,14 +208,14 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"rendered": written}))
         return 0
 
-    max_count: dict[str, int] = {}
-    for spec in args.max_count:
-        if "=" not in spec:
-            print(f"usage error: --max-count expects RULE=N, got {spec!r}",
-                  file=sys.stderr)
-            return EXIT_USAGE_ERROR
-        k, v = spec.split("=", 1)
-        max_count[k] = int(v)
+    try:  # before any Spark session starts
+        gates = GateConfig(max_count={
+            k: int(v) for k, _, v in (spec.partition("=") for spec in args.max_count)
+        })
+    except ValueError as e:
+        print(f"usage error: --max-count expects RULE=N, a registered RULE and "
+              f"an integer N >= 0 ({e})", file=sys.stderr)
+        return EXIT_USAGE_ERROR
 
     from codeclone_spark.plans.runner import RunConfig, run
     from codeclone_spark.session import get_spark
@@ -238,7 +238,7 @@ def main(argv: list[str] | None = None) -> int:
                 neardup_transcript=args.neardup_transcript,
                 neardup_threshold=args.neardup_threshold,
                 neardup_max_bucket=args.neardup_max_bucket,
-                gates=GateConfig(max_count=max_count),
+                gates=gates,
             ),
         )
     except Exception as e:  # unreadable input etc. -> contract error

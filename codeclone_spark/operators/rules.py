@@ -24,10 +24,12 @@ Rule-id scheme mirrors ``findings/ids.py:10-23``: ``family:detail[:column]``.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codeclone_spark.functions.audio import DUR_TOLERANCE_MS, SNR_MIN_DB
@@ -556,7 +558,9 @@ class GateConfig:
     """Per-rule violation budgets (reference ``MetricGateConfig`` /
     ``report/gates/evaluator.py``).  ``max_count`` is an absolute cap,
     ``max_permille`` a rate cap — a rule fails its partition when EITHER is
-    exceeded.  Defaults are strict (0 tolerance) like ``--ci`` mode."""
+    exceeded.  Defaults are strict (0 tolerance) like ``--ci`` mode.  A
+    budget names a registered rule and is a finite number >= 0; anything
+    else is rejected here, at construction."""
 
     max_count: dict[str, int] = field(default_factory=dict)
     max_permille: dict[str, float] = field(default_factory=dict)
@@ -565,6 +569,11 @@ class GateConfig:
     ks_max: float = 0.25
     # max relative delta of any of p50/p95/p99 vs the baseline snapshot
     quantile_rel_max: float = 0.25
+
+    def __post_init__(self) -> None:
+        for rid, v in [*self.max_count.items(), *self.max_permille.items()]:
+            if rid not in RULE_BY_ID or not (math.isfinite(v) and v >= 0):
+                raise ValueError(f"bad budget {rid}={v!r}")
 
     def budget(self, rule_id: str) -> tuple[int | None, float | None]:
         """Configured budgets for *rule_id*; ``None`` = constraint unset.
@@ -584,113 +593,86 @@ class GateConfig:
         )
 
 
-def build_verdicts(
-    violation_counts: DataFrame,
-    partition_rows: DataFrame,
-    gates: GateConfig,
-    test_lane: set[str] | None = None,
-) -> DataFrame:
-    """(partition, rule_id) -> pass/reason/novelty.
+def _java_double(x: float) -> str:
+    """A non-negative *x* as Java's ``Double.toString`` (Spark's cast to
+    string) prints it, the form reasons carry into ``report_sha256`` and
+    the goldens: plain decimals in [1e-3, 1e7), else
+    ``<d>.<digits>E<exp>`` such as ``3.0E-4``.  Digits are the shortest
+    round-trip form, which JDK 17 also prints for all but rare values
+    such as 1e23."""
+    if x == 0 or 1e-3 <= x < 1e7:
+        return repr(x)
+    d = Decimal(repr(x)).normalize()
+    digits = "".join(map(str, d.as_tuple().digits))
+    return f"{digits[0]}.{digits[1:] or '0'}E{d.adjusted()}"
 
-    *violation_counts*: (partition, rule_id, n_viol, n_new) where n_new counts
-    violations NOT in the baseline accepted set.  *partition_rows*: (part,
-    rows).  Every (partition x row rule) pair gets a verdict (dense grid), so
-    a clean partition still asserts an explicit pass — the reference's gate
-    evaluator enumerates every configured gate the same way.
 
-    *test_lane* partitions (reference is_test_filepath lane routing,
-    analysis/units.py:151,176) are validated and reported but never gate a
-    run: their verdicts pass with an informational reason."""
-    spark = violation_counts.sparkSession
-    all_rules = ROW_RULE_IDS + TABLE_RULE_IDS
-    rules_df = local_frame(spark, [(r,) for r in all_rules], "rule_id string")
-    grid = partition_rows.select(
-        F.col("part").alias("partition"), "rows"
-    ).crossJoin(F.broadcast(rules_df))
-
-    j = grid.join(violation_counts, ["partition", "rule_id"], "left").fillna(
-        {"n_viol": 0, "n_new": 0}
-    )
-
-    # -1 encodes "constraint unset" in the broadcast literal maps (budgets
-    # are non-negative by construction, so the sentinel can't collide).
-    budget_count = F.create_map(
-        *[
-            x
-            for r in all_rules
-            for x in (
-                F.lit(r),
-                F.lit(gates.budget(r)[0] if gates.budget(r)[0] is not None else -1),
-            )
-        ]
-    )
-    budget_pm = F.create_map(
-        *[
-            x
-            for r in all_rules
-            for x in (
-                F.lit(r),
-                F.lit(gates.budget(r)[1] if gates.budget(r)[1] is not None else -1.0),
-            )
-        ]
-    )
-    max_n = budget_count[F.col("rule_id")]
-    max_pm = budget_pm[F.col("rule_id")]
+def gate_verdict(
+    gates: GateConfig, rule_id: str, n_viol: int, n_new: int, rows: int,
+    in_lane: bool = False,
+) -> tuple[bool, str, str]:
+    """The gate's ``(pass, reason, novelty)`` for one count-table cell:
+    *n_viol* violations of *rule_id*, *n_new* of them new, in a partition
+    of *rows* rows.  The whole cell policy lives here, evaluated once per
+    cell on the driver.  *in_lane* cells are the test lane's (reference
+    is_test_filepath lane routing, analysis/units.py:151,176): reported,
+    but a failing verdict passes with an informational reason."""
+    max_n, max_pm = gates.budget(rule_id)
     # Accepted (baseline-known) violations don't trip the gate: only NEW ones
     # count against the budget (reference diff-gating: fail_on_new).
-    eff = F.col("n_new")
     # Compare the UNROUNDED rate: rounding to 3 decimals first would let up
     # to 0.0005 permille (e.g. 4 violations in a 10^7-row partition) slip
     # under a zero-tolerance budget.  Round only for the reason string.
-    eff_pm_raw = eff * 1000.0 / F.greatest(F.col("rows"), F.lit(1))
-    eff_pm = F.round(eff_pm_raw, 3)
+    pm = n_new * 1000.0 / max(rows, 1)
     # A rule fails when EITHER configured budget is exceeded (reference
     # report/gates/evaluator.py:500-521) -> pass requires BOTH to hold.
-    count_ok = (max_n < 0) | (eff <= max_n)
-    pm_ok = (max_pm < 0.0) | (eff_pm_raw <= max_pm)
-    passed = count_ok & pm_ok
+    passed = (max_n is None or n_new <= max_n) and (max_pm is None or pm <= max_pm)
+    novelty = "new" if n_new > 0 else "known"
+    if passed:
+        detail = f"{n_viol} violation(s), {n_new} new, within budget"
+        return True, f"{rule_id}: ok ({detail if n_viol else '0 violations'})", novelty
+    # printed as Spark's round() gives it (HALF_UP on the shortest decimal
+    # form), which report_sha256 and the goldens pin
+    pm_3 = float(Decimal(repr(pm)).quantize(Decimal("0.001"), ROUND_HALF_UP))
+    reason = (
+        f"{rule_id}: {n_new} new violation(s) ({_java_double(pm_3)} permille) "
+        f"exceed budget (max_count={'unset' if max_n is None else max_n}, "
+        f"max_permille={'unset' if max_pm is None else _java_double(max_pm)})"
+    )
+    # Table-scope rules (uniq:clip_id) are attributed to min(part) only
+    # for reporting; a duplicate group can span lane and production
+    # partitions, so the lane pass-through must never apply to them.
+    if in_lane and rule_id not in TABLE_RULE_IDS:
+        return True, "test-lane (informational): " + reason, novelty
+    return False, reason, novelty
 
-    reason = F.when(
-        passed & (F.col("n_viol") == 0),
-        F.concat_ws("", F.col("rule_id"), F.lit(": ok (0 violations)")),
-    ).when(
-        passed,
-        F.format_string(
-            "%s: ok (%d violation(s), %d new, within budget)",
-            F.col("rule_id"),
-            F.col("n_viol"),
-            eff,
-        ),
-    ).otherwise(
-        F.format_string(
-            "%s: %d new violation(s) (%s permille) exceed budget (max_count=%s, max_permille=%s)",
-            F.col("rule_id"),
-            eff,
-            eff_pm.cast("string"),
-            F.when(max_n < 0, F.lit("unset")).otherwise(max_n.cast("string")),
-            F.when(max_pm < 0.0, F.lit("unset")).otherwise(max_pm.cast("string")),
-        )
+
+def build_verdicts(
+    spark: SparkSession, parts: list[str], verdicts: list[tuple]
+) -> DataFrame:
+    """The verdicts sink: the driver-evaluated *verdicts* — ``(partition,
+    rule_id, pass, reason, novelty)`` rows — plus the zero cells of the
+    dense (*parts* x row and table rules) grid, so a clean partition still
+    asserts an explicit pass, as the reference's gate evaluator enumerates
+    every configured gate.  A zero cell can get only one verdict, whatever
+    the budgets, so the grid stays in Spark and never reaches the driver."""
+    evaluated = local_frame(
+        spark, verdicts,
+        "`partition` string, rule_id string, pass boolean, reason string, "
+        "novelty string",
     )
-    novelty = F.when(F.col("n_new") > 0, F.lit("new")).otherwise(F.lit("known"))
-    if test_lane:
-        # Table-scope rules (uniq:clip_id) are attributed to min(part) only
-        # for reporting; a duplicate group can span lane and production
-        # partitions, so the lane pass-through must never apply to them.
-        in_lane = F.col("partition").isin(sorted(test_lane)) & ~F.col(
-            "rule_id"
-        ).isin(TABLE_RULE_IDS)
-        reason = F.when(
-            in_lane & ~passed,
-            F.concat(F.lit("test-lane (informational): "), reason),
-        ).otherwise(reason)
-        passed = in_lane | passed
-    return j.select(
-        "partition",
-        "rule_id",
-        passed.alias("pass"),
-        reason.alias("reason"),
-        novelty.alias("novelty"),
+    zero_by_rule = local_frame(
+        spark,
+        [(r, *gate_verdict(GateConfig(), r, 0, 0, 0))
+         for r in ROW_RULE_IDS + TABLE_RULE_IDS],
+        "rule_id string, pass boolean, reason string, novelty string",
     )
+    zero_cells = (
+        local_frame(spark, [(p,) for p in parts], "`partition` string")
+        .crossJoin(F.broadcast(zero_by_rule))
+        .join(evaluated, ["partition", "rule_id"], "left_anti")
+    )
+    return evaluated.unionByName(zero_cells)
 
 
 def violation_key(df: DataFrame) -> Column:

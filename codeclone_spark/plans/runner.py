@@ -49,6 +49,7 @@ from codeclone_spark.operators.rules import (
     DUR_BIN_EDGES,
     NEARDUP_RULE_ID,
     NUMERIC_STATS_COLUMNS,
+    RULE_BY_ID,
     RULE_SEVERITY,
     SCHEMA_RULE_IDS,
     TABLE_SCOPE,
@@ -56,9 +57,9 @@ from codeclone_spark.operators.rules import (
     build_verdicts,
     evaluate_row_rules,
     evaluate_uniqueness,
+    gate_verdict,
     partition_aggregates,
     qsketch_counts_multi,
-    rule_spec,
     violation_key,
 )
 from codeclone_spark.operators.schema_diff import canonical_schema, schema_diff
@@ -179,9 +180,10 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
        (``_wave_partials``), then the ledger commit (``_ledger_entries``)
     4. table scope: exact uniqueness, the opt-in near-dup clusters
        (``_neardup_stage``) and the count table (``_gate_counts``)
-    5. verdicts: the dense per-(partition, rule) grid plus the table-scope
-       drift, schema and near-dup verdicts, and the review queue; the grid,
-       the near-dup verdict and the queue read the count table
+    5. verdicts: ``gate_verdict`` on each of the count table's
+       (partition, rule) cells, the table-scope drift, schema and near-dup
+       verdicts, and the review queue; the failed gates come from these
+       driver rows, the verdicts sink adds the grid's zero cells
     6. sinks (``_write_sinks``), the report (``_rule_digests``,
        ``_findings``, ``_stats_doc``, ``_seal_report``), then either the
        baseline update (``_update_baseline``) or the gate's exit code
@@ -331,20 +333,20 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     )
     _mark("uniqueness_and_ndv")
 
-    # --- verdicts: the dense grid, then one row per table-scope rule
-    part_rows = local_frame(
-        spark,
-        [(p, int(ledger.partitions.get(p, {}).get("rows", 0))) for p in all_parts],
-        "part string, rows long",
-    )
+    # --- verdicts: one per count-table cell of a partition (the near-dup
+    # cell is table-scope), then one row per table-scope rule
+    part_rows = {p: int(ledger.partitions.get(p, {}).get("rows", 0)) for p in all_parts}
     lane_parts: set[str] = set()
     if cfg.test_lane_pattern:
         lane_rx = re.compile(cfg.test_lane_pattern)
         lane_parts = {p for p in all_parts if lane_rx.search(p)}
-    counts_df = local_frame(
-        spark, counts, "`partition` string, rule_id string, n_viol long, n_new long"
-    )
-    verdicts = build_verdicts(counts_df, part_rows, cfg.gates, lane_parts)
+    verdict_rows = [
+        (p, rid, *gate_verdict(
+            cfg.gates, rid, n_viol, n_new, part_rows[p], p in lane_parts
+        ))
+        for p, rid, n_viol, n_new in counts
+        if p in part_rows
+    ]
     quantiles_by_col = _table_quantiles(table_stats)
     drift_rows, drift_metrics = _drift_verdicts(
         cfg.gates, snapshot, table_stats, quantiles_by_col
@@ -353,14 +355,15 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         current_schema, snapshot
     )
     warnings += schema_warns
-    table_rows = drift_rows + schema_rows
+    verdict_rows += drift_rows + schema_rows
     if cfg.neardup_transcript:
-        table_rows.append(_neardup_verdict(cfg.gates, neardup_metrics, counts))
-    verdicts = verdicts.unionByName(local_frame(
-        spark, table_rows,
-        "`partition` string, rule_id string, pass boolean, reason string, "
-        "novelty string",
-    ))
+        verdict_rows.append(_neardup_verdict(
+            cfg.gates, neardup_metrics, counts, table_stats.get("rows", 0)
+        ))
+    failed = sorted(
+        (p, rid, reason) for p, rid, ok, reason, _ in verdict_rows if not ok
+    )
+    verdicts = build_verdicts(spark, all_parts, verdict_rows)
     review_queue = _review_queue(counts)
 
     # --- canonical, deterministically-ordered outputs
@@ -368,13 +371,6 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     _mark("final_writes")
 
     run_digest = _rule_digests(spark.read.parquet(violations_path))
-    failed = [
-        (r["partition"], r["rule_id"], r["reason"])
-        for r in spark.read.parquet(verdicts_path)
-        .filter(~F.col("pass"))
-        .orderBy("partition", "rule_id")
-        .collect()
-    ]
     findings = _findings(ledger, all_parts, counts, n_suppressed_directive, failed)
     stats_doc, histograms = _stats_doc(table_stats, quantiles_by_col)
     metrics = {
@@ -407,9 +403,7 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
             "partitions_resumed": len(done),
             "partitions_test_lane": len(lane_parts),
             "rows": table_stats.get("rows", 0),
-            "rows_test_lane": sum(
-                int(ledger.partitions.get(p, {}).get("rows", 0)) for p in lane_parts
-            ),
+            "rows_test_lane": sum(part_rows[p] for p in lane_parts),
         },
         "findings": findings,
         "metrics": metrics,
@@ -442,11 +436,15 @@ def _parse_suppressions(suppressions: list[str]) -> list[tuple[str, str]]:
         rid, _, part = s.rpartition(":")
         if not rid or not part or not re.match(r"^[A-Za-z0-9:_\-]+$", rid):
             raise ValueError(f"malformed suppression {s!r} (rule_id:partition)")
+        # a directive naming no registered rule would suppress nothing
+        # while the run looks suppressed
+        if rid not in RULE_BY_ID:
+            raise ValueError(f"suppression {s!r}: unknown rule id {rid!r}")
         # Partition-scoped directives never match table-scope rules:
         # uniq:clip_id (and near-dup clusters) are attributed to
         # min(part) for reporting only, so "rule:<part>" would suppress
         # groups spanning OTHER partitions.  Only '*' may suppress them.
-        if part != "*" and rule_spec(rid).scope in CROSS_PARTITION_SCOPES:
+        if part != "*" and RULE_BY_ID[rid].scope in CROSS_PARTITION_SCOPES:
             raise ValueError(
                 f"suppression {rid}:{part}: table-scope rules accept "
                 "only the '*' partition"
@@ -979,16 +977,18 @@ def _schema_verdicts(
 
 def _neardup_verdict(
     gates: GateConfig, neardup_metrics: dict[str, Any],
-    counts: list[tuple[str, str, int, int]],
+    counts: list[tuple[str, str, int, int]], rows: int,
 ) -> tuple:
-    """ONE table-scope near-dup verdict, failing on NEW clusters (reference
-    fail_on_new semantics, surfaces/cli/execution.py).  The new count is
-    the count table's near-dup cell, so a '*'-scoped suppression directive
-    has already turned new clusters into accepted debt."""
+    """ONE table-scope near-dup verdict over the table's *rows*, failing
+    on NEW clusters (reference fail_on_new semantics,
+    surfaces/cli/execution.py) by ``gate_verdict``'s budget check, in the
+    stage's own wording.  The new count is the count table's near-dup
+    cell, so a '*'-scoped suppression directive has already turned new
+    clusters into accepted debt."""
     nd_n, nd_new = neardup_metrics["n_clusters"], neardup_metrics["n_new"]
     nd_eff = next(nn for _p, rid, _nv, nn in counts if rid == NEARDUP_RULE_ID)
+    nd_ok, _, novelty = gate_verdict(gates, NEARDUP_RULE_ID, nd_n, nd_eff, rows)
     nd_budget, _ = gates.budget(NEARDUP_RULE_ID)
-    nd_ok = nd_budget is None or nd_eff <= nd_budget
     if nd_ok and nd_n == 0:
         reason = f"{NEARDUP_RULE_ID}: ok (0 clusters)"
     elif nd_ok:
@@ -1002,7 +1002,6 @@ def _neardup_verdict(
             f"{NEARDUP_RULE_ID}: {nd_eff} new near-dup cluster(s) "
             f"exceed budget (max_count={nd_budget})"
         )
-    novelty = "new" if nd_eff > 0 else "known"
     return (TABLE_SCOPE, NEARDUP_RULE_ID, nd_ok, reason, novelty)
 
 
@@ -1016,7 +1015,7 @@ def _review_queue(counts: list[tuple[str, str, int, int]]) -> list[dict[str, Any
     never ranks.  Python orders ``str`` by code point, as Spark's binary
     string order does."""
     scored = [
-        (_SEV_WEIGHT.get(RULE_SEVERITY.get(rid, "error"), 3) * n_new, part, rid, n_new)
+        (_SEV_WEIGHT[RULE_SEVERITY[rid]] * n_new, part, rid, n_new)
         for part, rid, _n_viol, n_new in counts
         if n_new > 0
     ]
@@ -1026,9 +1025,9 @@ def _review_queue(counts: list[tuple[str, str, int, int]]) -> list[dict[str, Any
             "partition": part,
             "rule_id": rid,
             "n_new": n_new,
-            "severity": RULE_SEVERITY.get(rid, "error"),
+            "severity": RULE_SEVERITY[rid],
             "score": score,
-            "action": rule_spec(rid).action,
+            "action": RULE_BY_ID[rid].action,
         }
         for score, part, rid, n_new in scored[:REVIEW_QUEUE_K]
     ]
@@ -1105,7 +1104,7 @@ def _findings(
             by_rule[rid] = by_rule.get(rid, 0) + n_viol
     by_severity: dict[str, int] = {}
     for rid, n in by_rule.items():
-        sev = RULE_SEVERITY.get(rid, "error")
+        sev = RULE_SEVERITY[rid]
         by_severity[sev] = by_severity.get(sev, 0) + n
     return {
         "total_violations": sum(by_rule.values()),

@@ -2,13 +2,18 @@
 help text as a contract file (tests/fixtures/contract_snapshots/
 cli_help.txt, SURVEY §5): any flag rename/removal must show up as an
 explicit golden diff, not a silent break for spark-submit wrappers.
+The run's usage errors are part of the contract too: exit 5, before any
+Spark session starts.
 """
 
 from __future__ import annotations
 
 import os
 
-from codeclone_spark.cli import build_parser
+import pytest
+
+from codeclone_spark import EXIT_USAGE_ERROR, session
+from codeclone_spark.cli import build_parser, main
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "cli_help.txt")
 
@@ -35,3 +40,32 @@ def test_cli_help_contract():
             "CLI surface changed — if intentional, delete "
             "tests/golden/cli_help.txt and re-run to re-freeze the contract"
         )
+
+
+@pytest.mark.parametrize("spec", [
+    "audio:snr",           # no '='
+    "audio:snr=two",       # not an integer
+    "audio:snr=1.5",
+    "audio:snr=-1",        # negative: once read as "no budget" by the grid
+    "audio:sr_allowed=1",  # no such rule: once silently ignored
+])
+def test_run_rejects_bad_max_count_before_spark(spec, monkeypatch, capsys):
+    def no_spark(*_a, **_k):
+        raise AssertionError("a Spark session started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    rc = main(["run", "--data-dir", "d", "--out-dir", "o", "--max-count", spec])
+    assert rc == EXIT_USAGE_ERROR
+    assert "usage error: --max-count" in capsys.readouterr().err
+
+
+def test_suppression_of_unknown_rule_is_rejected():
+    """A directive for a rule the registry lacks would suppress nothing
+    while the run looks suppressed."""
+    from codeclone_spark.plans.runner import _parse_suppressions
+
+    with pytest.raises(ValueError, match="unknown rule id"):
+        _parse_suppressions(["audio:sr_allowed:*"])
+    assert _parse_suppressions(["audio:snr:*", "stats:range:dur_ms:flac-b01"]) == [
+        ("audio:snr", "*"), ("stats:range:dur_ms", "flac-b01"),
+    ]

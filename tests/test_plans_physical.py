@@ -240,18 +240,18 @@ def test_local_frame_matches_create_dataframe(spark):
 
 
 def test_runner_driver_frames_are_local_relations(spark, tiny_dir, tiny_run):
-    """The run's driver-built frames (inline accepted keys, the verdict
-    grid's rule list, the count table) are local relations: an
-    ``ExistingRDD`` leaf would pickle them through Python workers on every
-    action that reads them."""
+    """The run's driver-built frames (inline accepted keys, and the
+    verdicts sink: the driver-evaluated cells and the grid's partition and
+    rule lists) are local relations: an ``ExistingRDD`` leaf would pickle
+    them through Python workers on every action that reads them."""
     from codeclone_spark.operators.rules import (
         GateConfig,
         build_verdicts,
         evaluate_uniqueness,
+        gate_verdict,
     )
     from codeclone_spark.plans.ledger import Ledger
     from codeclone_spark.plans.runner import RunConfig, _accepted_keys, _gate_counts
-    from codeclone_spark.schema import local_frame
 
     out_dir = os.path.dirname(tiny_run.violations_path)
     cfg = RunConfig(data_dir=tiny_dir, out_dir=out_dir)
@@ -264,14 +264,11 @@ def test_runner_driver_frames_are_local_relations(spark, tiny_dir, tiny_run):
         {"n_clusters": 1, "n_new": 1}, [],
     )
     assert ("<table>", "neardup:transcript", 1, 1) in counts
-    part_rows = spark.range(len(all_parts)).select(
-        F.concat(F.lit("p"), F.col("id").cast("string")).alias("part"),
-        F.lit(1).cast("long").alias("rows"),
-    )
-    counts_df = local_frame(
-        spark, counts, "`partition` string, rule_id string, n_viol long, n_new long"
-    )
-    verdicts = build_verdicts(counts_df, part_rows, GateConfig())
+    evaluated = [
+        (p, rid, *gate_verdict(GateConfig(), rid, n_viol, n_new, 1))
+        for p, rid, n_viol, n_new in counts
+    ]
+    verdicts = build_verdicts(spark, all_parts, evaluated)
     for df in (acc_df, verdicts):
         body = _plan(df, "simple").split("== Physical Plan ==")[-1]
         assert "ExistingRDD" not in body
@@ -300,7 +297,7 @@ def test_runs_leave_nothing_persisted(spark, tiny_dir, tmp_path):
 
 # Spark jobs one tiny gated run() launches.  A ratchet: lower it when a
 # change removes jobs; a change that adds jobs raises it and says why.
-RUN_JOB_BUDGET = 48
+RUN_JOB_BUDGET = 44
 
 
 def test_run_job_budget(spark, tiny_dir, tiny_run, tmp_path):

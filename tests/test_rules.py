@@ -10,6 +10,7 @@ from codeclone_spark.operators.rules import (
     build_verdicts,
     evaluate_row_rules,
     evaluate_uniqueness,
+    gate_verdict,
     partition_aggregates,
 )
 from codeclone_spark.plans.facts import FACTS_OUT_SCHEMA
@@ -170,12 +171,14 @@ def test_partition_aggregates_histogram(spark):
 
 
 def test_verdicts_gates_and_novelty(spark):
-    counts = spark.createDataFrame(
-        [("p1", "audio:snr", 2, 2), ("p1", "uniq:clip_id", 1, 0)],
-        ["partition", "rule_id", "n_viol", "n_new"],
-    )
-    part_rows = spark.createDataFrame([("p1", 100), ("p2", 50)], ["part", "rows"])
-    v = build_verdicts(counts, part_rows, GateConfig()).collect()
+    rows = {"p1": 100, "p2": 50}
+    evaluated = [
+        (p, rid, *gate_verdict(GateConfig(), rid, n_viol, n_new, rows[p]))
+        for p, rid, n_viol, n_new in (
+            ("p1", "audio:snr", 2, 2), ("p1", "uniq:clip_id", 1, 0)
+        )
+    ]
+    v = build_verdicts(spark, sorted(rows), evaluated).collect()
     by = {(r["partition"], r["rule_id"]): r for r in v}
     # dense grid: every partition x rule pair exists
     from codeclone_spark.operators.rules import ROW_RULE_IDS, TABLE_RULE_IDS
@@ -190,71 +193,59 @@ def test_verdicts_gates_and_novelty(spark):
     assert "ok (0 violations)" in by[("p2", "audio:snr")]["reason"]
 
 
-def test_gate_budget(spark):
-    counts = spark.createDataFrame(
-        [("p1", "audio:snr", 3, 3)], ["partition", "rule_id", "n_viol", "n_new"]
-    )
-    part_rows = spark.createDataFrame([("p1", 100)], ["part", "rows"])
+def test_gate_budget():
     g = GateConfig(max_count={"audio:snr": 5})
-    v = {r["rule_id"]: r for r in build_verdicts(counts, part_rows, g).collect()}
-    assert v["audio:snr"]["pass"]
+    assert gate_verdict(g, "audio:snr", 3, 3, 100)[0]
 
 
-def test_gate_zero_budget_huge_partition(spark):
+def test_gate_zero_budget_huge_partition():
     """1 new violation in a 10M-row partition must FAIL a zero-tolerance
     gate: the permille rounds to 0.000 but the count budget (0) is exceeded,
     and pass requires BOTH budgets to hold (reference evaluator semantics:
     fail when EITHER is exceeded)."""
-    counts = spark.createDataFrame(
-        [("p1", "audio:snr", 1, 1)], ["partition", "rule_id", "n_viol", "n_new"]
-    )
-    part_rows = spark.createDataFrame([("p1", 10_000_000)], ["part", "rows"])
-    v = {r["rule_id"]: r for r in build_verdicts(counts, part_rows, GateConfig()).collect()}
-    assert not v["audio:snr"]["pass"]
-    assert "exceed budget" in v["audio:snr"]["reason"]
+    passed, reason, _ = gate_verdict(GateConfig(), "audio:snr", 1, 1, 10_000_000)
+    assert not passed
+    assert "exceed budget" in reason
 
 
-def test_gate_unrounded_permille(spark):
+def test_gate_unrounded_permille():
     """A configured permille budget compares against the UNROUNDED rate:
     4 violations / 10M rows = 0.0004 permille > max_permille=0.0003 must
     fail even though both round to 0.000."""
-    counts = spark.createDataFrame(
-        [("p1", "audio:snr", 4, 4)], ["partition", "rule_id", "n_viol", "n_new"]
-    )
-    part_rows = spark.createDataFrame([("p1", 10_000_000)], ["part", "rows"])
     g = GateConfig(
         max_count={"audio:snr": 100}, max_permille={"audio:snr": 0.0003}
     )
-    v = {r["rule_id"]: r for r in build_verdicts(counts, part_rows, g).collect()}
-    assert not v["audio:snr"]["pass"]
+    assert not gate_verdict(g, "audio:snr", 4, 4, 10_000_000)[0]
 
 
-def test_gate_both_budgets_must_hold(spark):
+def test_gate_both_budgets_must_hold():
     """Count within budget but permille exceeded -> fail (AND, not OR)."""
-    counts = spark.createDataFrame(
-        [("p1", "audio:snr", 3, 3)], ["partition", "rule_id", "n_viol", "n_new"]
-    )
-    part_rows = spark.createDataFrame([("p1", 100)], ["part", "rows"])
     g = GateConfig(max_count={"audio:snr": 5}, max_permille={"audio:snr": 10.0})
-    v = {r["rule_id"]: r for r in build_verdicts(counts, part_rows, g).collect()}
-    assert not v["audio:snr"]["pass"]  # 30 permille > 10
+    assert not gate_verdict(g, "audio:snr", 3, 3, 100)[0]  # 30 permille > 10
     g2 = GateConfig(max_count={"audio:snr": 5}, max_permille={"audio:snr": 50.0})
-    v2 = {r["rule_id"]: r for r in build_verdicts(counts, part_rows, g2).collect()}
-    assert v2["audio:snr"]["pass"]
+    assert gate_verdict(g2, "audio:snr", 3, 3, 100)[0]
 
 
-def test_gate_count_only_config_ignores_permille(spark):
+def test_gate_count_only_config_ignores_permille():
     """A max_count-only config must not be tightened by an implicit
     0-permille cap: 3 violations in 100 rows (30 permille) passes when
     max_count=5 and no permille budget is configured."""
-    counts = spark.createDataFrame(
-        [("p1", "audio:snr", 3, 3)], ["partition", "rule_id", "n_viol", "n_new"]
-    )
-    part_rows = spark.createDataFrame([("p1", 100)], ["part", "rows"])
     g = GateConfig(max_count={"audio:snr": 5})
-    v = {r["rule_id"]: r for r in build_verdicts(counts, part_rows, g).collect()}
-    assert v["audio:snr"]["pass"]
+    assert gate_verdict(g, "audio:snr", 3, 3, 100)[0]
 
+
+@pytest.mark.parametrize("budgets", [
+    {"max_count": {"audio:snr": -1}},
+    {"max_permille": {"audio:snr": -0.5}},
+    {"max_permille": {"audio:snr": float("nan")}},
+    {"max_count": {"audio:sr_allowed": 1}},
+])
+def test_gate_config_rejects_bad_budgets(budgets):
+    """A negative budget once read as "unset" in the grid (the cell passed
+    with new violations) and as "always fail" in the near-dup verdict;
+    budgets are now checked once, at construction."""
+    with pytest.raises(ValueError):
+        GateConfig(**budgets)
 
 _UNSET_FAIL = "exceed budget (max_count=0, max_permille=unset)"
 
@@ -322,20 +313,7 @@ VERDICT_CASES = {
 }
 
 
-def _verdict(spark, gates, rule_id, n_viol, n_new, rows, in_lane):
-    counts = spark.createDataFrame(
-        [("p1", rule_id, n_viol, n_new)], ["partition", "rule_id", "n_viol", "n_new"]
-    )
-    part_rows = spark.createDataFrame([("p1", rows)], ["part", "rows"])
-    lane = {"p1"} if in_lane else None
-    (r,) = [
-        r for r in build_verdicts(counts, part_rows, gates, lane).collect()
-        if r["rule_id"] == rule_id
-    ]
-    return (r["pass"], r["reason"], r["novelty"])
-
-
 @pytest.mark.parametrize("case", sorted(VERDICT_CASES))
-def test_gate_verdict_literals(spark, case):
+def test_gate_verdict_literals(case):
     *cell, want = VERDICT_CASES[case]
-    assert _verdict(spark, *cell) == want
+    assert gate_verdict(*cell) == want
