@@ -208,7 +208,9 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"rendered": written}))
         return 0
 
-    try:  # before any Spark session starts
+    from codeclone_spark.plans.runner import RunConfig, _parse_suppressions, run
+
+    try:  # usage errors exit before any Spark session starts
         gates = GateConfig(max_count={
             k: int(v) for k, _, v in (spec.partition("=") for spec in args.max_count)
         })
@@ -216,8 +218,12 @@ def main(argv: list[str] | None = None) -> int:
         print(f"usage error: --max-count expects RULE=N, a registered RULE and "
               f"an integer N >= 0 ({e})", file=sys.stderr)
         return EXIT_USAGE_ERROR
+    try:
+        _parse_suppressions(args.suppress)
+    except ValueError as e:
+        print(f"usage error: --suppress expects RULE:PART ({e})", file=sys.stderr)
+        return EXIT_USAGE_ERROR
 
-    from codeclone_spark.plans.runner import RunConfig, run
     from codeclone_spark.session import get_spark
 
     spark = get_spark(app_name="codeclone-spark-run", cores=args.cores)

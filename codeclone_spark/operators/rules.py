@@ -546,7 +546,6 @@ def partition_aggregates(facts: DataFrame) -> DataFrame:
             (F.col("transcript").isNull() | (F.length("transcript") == 0)).cast("long")
         ).alias("transcript_null"),
         F.sum((~F.col("decode_ok")).cast("long")).alias("undecodable"),
-        F.approx_count_distinct("clip_id").alias("approx_ndv"),
         _hist_expr("dur_ms", DUR_BIN_EDGES).alias("dur_hist"),
         *col_aggs,
         *sr_cats,

@@ -54,6 +54,7 @@ from codeclone_spark.operators.rules import (
     SCHEMA_RULE_IDS,
     TABLE_SCOPE,
     GateConfig,
+    _java_double,
     build_verdicts,
     evaluate_row_rules,
     evaluate_uniqueness,
@@ -617,7 +618,6 @@ def _empty_partials() -> dict[str, Any]:
         "rows": 0,
         "transcript_null": 0,
         "undecodable": 0,
-        "approx_ndv": 0,
         "dur_hist": [0] * (len(DUR_BIN_EDGES) - 1),
     }
     for spec in NUMERIC_STATS_COLUMNS:
@@ -655,7 +655,6 @@ def _ledger_entries(
             "rows": d["rows"],
             "transcript_null": d["transcript_null"],
             "undecodable": d["undecodable"],
-            "approx_ndv": d["approx_ndv"],
             "dur_hist": [int(x) for x in d["dur_hist"]],
             "colstats": {
                 spec.name: {
@@ -740,7 +739,7 @@ def _neardup_stage(
         # materializes its LSH candidates there ("cands" — exchange reuse
         # does NOT survive AQE at scale, see lsh_verified_pairs docstring)
         # and connected_components roots its iteration there ("edges",
-        # "round=*", "labels") — filenames are disjoint by construction
+        # "round=<k>") — filenames are disjoint by construction
         nd_edges = lsh_verified_pairs(
             ndocs, "doc_id", "transcript",
             max_bucket=cfg.neardup_max_bucket or None,
@@ -988,7 +987,7 @@ def _neardup_verdict(
     nd_n, nd_new = neardup_metrics["n_clusters"], neardup_metrics["n_new"]
     nd_eff = next(nn for _p, rid, _nv, nn in counts if rid == NEARDUP_RULE_ID)
     nd_ok, _, novelty = gate_verdict(gates, NEARDUP_RULE_ID, nd_n, nd_eff, rows)
-    nd_budget, _ = gates.budget(NEARDUP_RULE_ID)
+    nd_budget, nd_pm = gates.budget(NEARDUP_RULE_ID)
     if nd_ok and nd_n == 0:
         reason = f"{NEARDUP_RULE_ID}: ok (0 clusters)"
     elif nd_ok:
@@ -1000,7 +999,9 @@ def _neardup_verdict(
     else:
         reason = (
             f"{NEARDUP_RULE_ID}: {nd_eff} new near-dup cluster(s) "
-            f"exceed budget (max_count={nd_budget})"
+            f"exceed budget (max_count={'unset' if nd_budget is None else nd_budget}"
+            + ("" if nd_pm is None else f", max_permille={_java_double(nd_pm)}")
+            + ")"
         )
     return (TABLE_SCOPE, NEARDUP_RULE_ID, nd_ok, reason, novelty)
 

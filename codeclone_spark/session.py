@@ -17,7 +17,6 @@ def get_spark(
     app_name: str = "codeclone_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
@@ -36,7 +35,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(8, n_cores)
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         # Correctness-critical: DuckDB timestamps are UTC-naive.
@@ -56,8 +55,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
 

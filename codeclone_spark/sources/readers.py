@@ -9,14 +9,10 @@ import os
 
 from pyspark.sql import DataFrame
 
+from codeclone_spark.schema import CLIPS_SCHEMA
+
 REQUIRED_CLIPS_COLUMNS = {
-    "clip_id": "string",
-    "bytes": "binary",
-    "sr_hz": "int",
-    "dur_ms": "int",
-    "codec": "string",
-    "transcript": "string",
-    "part": "string",
+    f.name: f.dataType.simpleString() for f in CLIPS_SCHEMA.fields
 }
 
 SENSITIVE_PREFIXES = ("/etc", "/proc", "/sys", "/dev", "/root/.ssh")

@@ -45,12 +45,11 @@ def stream_validate(
     fixtures_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Micro-batch validation: each batch builds its facts exactly as a
     batch-engine wave does (``build_facts``) and runs the single-scan rule
-    evaluation, appending violation parquet.  `trigger once` processes the
-    backlog and stops (test mode)."""
+    evaluation, appending violation parquet.  The ``availableNow`` trigger
+    processes the backlog and stops."""
     fixtures_meta = read_fixtures_meta(spark, fixtures_dir)
     fixtures_pcm = read_fixtures_pcm(spark, fixtures_dir)
 
@@ -69,13 +68,12 @@ def stream_validate(
         finally:
             decoded.unpersist()
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_drift_monitor(
@@ -84,7 +82,6 @@ def stream_drift_monitor(
     baseline_path: str,
     out_dir: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
     psi_max: float = 0.25,
 ) -> StreamingQuery:
     """Live distribution-drift monitor: every micro-batch folds its dur_ms
@@ -132,13 +129,12 @@ def stream_drift_monitor(
         )
         sink(out, batch_id)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_violation_counts(

@@ -59,6 +59,21 @@ def test_run_rejects_bad_max_count_before_spark(spec, monkeypatch, capsys):
     assert "usage error: --max-count" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("directive", [
+    "audio:sr_allowed:*",    # no such rule
+    "audio:snr:",            # malformed: empty partition
+    "uniq:clip_id:flac-b01",  # table-scope rules accept only '*'
+])
+def test_run_rejects_bad_suppression_before_spark(directive, monkeypatch, capsys):
+    def no_spark(*_a, **_k):
+        raise AssertionError("a Spark session started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    rc = main(["run", "--data-dir", "d", "--out-dir", "o", "--suppress", directive])
+    assert rc == EXIT_USAGE_ERROR
+    assert "usage error: --suppress" in capsys.readouterr().err
+
+
 def test_suppression_of_unknown_rule_is_rejected():
     """A directive for a rule the registry lacks would suppress nothing
     while the run looks suppressed."""

@@ -1,13 +1,12 @@
 """Randomized correctness for connected_components vs a union-find oracle.
 
 The fixture/oracle queries exercise CC on near-clique dedup graphs that
-converge inside the simple-propagation phase; the long-chain test covers
-one pathological diameter.  This file closes the gap in between: seeded
-random graphs of varied density, structured adversaries (cliques joined
-by chains, stars, isolated self-loops), string AND integer ids, checked
-bit-for-bit against a driver-side union-find — including with
-``simple_rounds=0`` so every shape also runs through the pointer-doubling
-phase (parquet-truncated lineage, the code path fixtures never reach).
+converge in two rounds; the long-chain tests cover pathological
+diameters.  This file closes the gap in between: seeded random graphs of
+varied density, structured adversaries (cliques joined by chains, stars,
+isolated self-loops), string AND integer ids, checked bit-for-bit against
+a driver-side union-find.  Every round jumps before it hops, so each
+shape runs through the pointer jump and its parquet-truncated lineage.
 """
 
 from __future__ import annotations
@@ -77,8 +76,7 @@ def _structured_cases() -> dict[str, list[tuple[str, str]]]:
     }
 
 
-@pytest.mark.parametrize("simple_rounds", [4, 0])
-def test_random_graphs_match_union_find(spark, tmp_path, simple_rounds):
+def test_random_graphs_match_union_find(spark, tmp_path):
     cases = dict(_structured_cases())
     cases["sparse_50"] = _random_edges(1, 50, 30)
     cases["dense_30"] = _random_edges(2, 30, 120)
@@ -89,12 +87,10 @@ def test_random_graphs_match_union_find(spark, tmp_path, simple_rounds):
         got = {
             r["id"]: r["cluster_id"]
             for r in connected_components(
-                df,
-                simple_rounds=simple_rounds,
-                scratch_dir=str(tmp_path / f"{name}_{simple_rounds}"),
+                df, scratch_dir=str(tmp_path / name)
             ).collect()
         }
-        assert got == expected, f"{name} (simple_rounds={simple_rounds})"
+        assert got == expected, name
 
 
 def test_integer_ids_match_union_find(spark, tmp_path):
@@ -164,11 +160,11 @@ def test_empty_edge_frames(spark, tmp_path):
 
 
 def test_giant_component_hot_label_key(spark, tmp_path, monkeypatch):
-    """Skew probe for the pointer-doubling self-join (graph.py joins on
+    """Skew probe for the pointer-jump self-join (graph.py joins on
     ``lbl``, which concentrates on the component minimum as clusters
     merge): one giant ~50k-node component plus uniform background must
-    complete through the doubling path (simple_rounds=0) and label every
-    node with the component minimum, without writing session conf.  With
+    complete and label every node with the component minimum, without
+    writing session conf.  With
     TIMING_PROBES set it also bounds the hot run's wall against a
     same-size uniform graph, so the hot label key cannot stall a round."""
     import time
@@ -181,9 +177,9 @@ def test_giant_component_hot_label_key(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(conf_type, "unset", lambda _s, *a: conf_writes.append(a))
 
     n = 50_000
-    # giant star: every node joined to node 0 -> after one propagation all
+    # giant star: every node joined to node 0 -> after one round all
     # labels collapse onto "000000", the single hottest possible key for
-    # the doubling join's label side
+    # the jump join's label side
     giant = spark.range(1, n).select(
         F.lit("000000").alias("id_a"),
         F.format_string("%06d", F.col("id")).alias("id_b"),
@@ -195,17 +191,13 @@ def test_giant_component_hot_label_key(spark, tmp_path, monkeypatch):
     )
 
     t0 = time.monotonic()
-    u_out = connected_components(
-        uniform, simple_rounds=0, scratch_dir=str(tmp_path / "uni")
-    )
+    u_out = connected_components(uniform, scratch_dir=str(tmp_path / "uni"))
     assert u_out.count() == 2 * ((n - 1 + 1) // 2)
     t_uniform = time.monotonic() - t0
 
     t0 = time.monotonic()
     g_out = connected_components(
-        giant.unionByName(uniform),
-        simple_rounds=0,
-        scratch_dir=str(tmp_path / "hot"),
+        giant.unionByName(uniform), scratch_dir=str(tmp_path / "hot")
     )
     bad = g_out.filter(
         F.col("id").rlike("^[0-9]") & (F.col("cluster_id") != "000000")

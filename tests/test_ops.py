@@ -250,8 +250,26 @@ def test_connected_components_labels(spark, tmp_path):
     assert set(full.values()) == {0}
 
 
+def test_connected_components_log_diameter_rounds(spark, tmp_path):
+    """Every round jumps before it hops, so pointer depth halves from the
+    first round: a path of ``2**k - 1`` hops is labeled after k rounds and
+    confirmed by one more, and a 1,024-hop path converges in 12."""
+    from pyspark.sql import functions as F
+
+    from codeclone_spark.operators import graph as g
+
+    path = spark.range(1024).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    comps = g.connected_components(
+        path, max_iter=12, scratch_dir=str(tmp_path / "path")
+    )
+    sizes = {r["cluster_id"]: r["n"] for r in g.cluster_sizes(comps).collect()}
+    assert sizes == {0: 1025}
+
+
 def test_connected_components_long_chain_and_no_leaked_persist(spark, tmp_path):
-    """Diameter robustness (pointer doubling): a 60-hop path graph — which
+    """Diameter robustness (pointer jumping): a 60-hop path graph — which
     plain min-label propagation could never finish inside the old
     max_iter=25 budget — converges under the default budget; and the call
     leaves NO persisted frames behind (repeated calls in a long-lived

@@ -298,21 +298,51 @@ def test_runs_leave_nothing_persisted(spark, tiny_dir, tmp_path):
 # Spark jobs one tiny gated run() launches.  A ratchet: lower it when a
 # change removes jobs; a change that adds jobs raises it and says why.
 RUN_JOB_BUDGET = 44
+# Spark jobs one connected_components call launches on the three-round
+# graph of test_connected_components_job_budget.  A ratchet, like
+# RUN_JOB_BUDGET.
+CC_JOB_BUDGET = 24
+
+
+def _newest_job(spark) -> int:
+    """Id of the newest job in the status store; counting by job-id range,
+    since the runner's pooled threads set no job group to count by."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job starts reach the store async
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return int(jobs.apply(0).jobId()) if jobs.size() else -1
 
 
 def test_run_job_budget(spark, tiny_dir, tiny_run, tmp_path):
-    """Counts the jobs of one tiny ``run()`` by job-id range in the status
-    store (the runner's pooled threads set no job group to count by)."""
+    """Counts the jobs of one tiny ``run()``."""
     from codeclone_spark.plans.runner import RunConfig, run
 
-    sc = spark.sparkContext._jsc.sc()
-
-    def newest_job() -> int:
-        sc.listenerBus().waitUntilEmpty()  # job starts reach the store async
-        jobs = sc.statusStore().jobsList(None)  # newest first
-        return int(jobs.apply(0).jobId()) if jobs.size() else -1
-
-    mark = newest_job()
+    mark = _newest_job(spark)
     run(spark, RunConfig(data_dir=tiny_dir, out_dir=str(tmp_path / "out")))
-    n_jobs = newest_job() - mark
+    n_jobs = _newest_job(spark) - mark
     assert n_jobs <= RUN_JOB_BUDGET, n_jobs
+
+
+def test_connected_components_job_budget(spark, tmp_path):
+    """Counts the jobs of one ``connected_components`` call on near-dup
+    pairs plus a 3-hop chain, which takes three rounds: labeled after two,
+    confirmed by the third."""
+    from codeclone_spark.operators.graph import connected_components
+    from codeclone_spark.schema import local_frame
+
+    pairs = [(f"d{i:02d}a", f"d{i:02d}b") for i in range(20)]
+    chain = [("c0", "c1"), ("c1", "c2"), ("c2", "c3")]
+    edges = local_frame(spark, pairs + chain, "id_a string, id_b string")
+    mark = _newest_job(spark)
+    comps = connected_components(edges, scratch_dir=str(tmp_path / "cc"))
+    n_jobs = _newest_job(spark) - mark
+    assert n_jobs <= CC_JOB_BUDGET, n_jobs
+    # one edge write, one write per round
+    assert sorted(os.listdir(tmp_path / "cc")) == [
+        "edges", "round=0", "round=1", "round=2",
+    ]
+    assert {r["id"]: r["cluster_id"] for r in comps.collect()} == {
+        **{a: a for a, _ in pairs},
+        **{b: a for a, b in pairs},
+        **dict.fromkeys(("c0", "c1", "c2", "c3"), "c0"),
+    }

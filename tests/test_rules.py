@@ -317,3 +317,24 @@ VERDICT_CASES = {
 def test_gate_verdict_literals(case):
     *cell, want = VERDICT_CASES[case]
     assert gate_verdict(*cell) == want
+
+
+@pytest.mark.parametrize("gates, budget", [
+    (GateConfig(), "max_count=0"),
+    (GateConfig(max_permille={"neardup:transcript": 0.0}),
+     "max_count=unset, max_permille=0.0"),
+    (GateConfig(max_count={"neardup:transcript": 3},
+                max_permille={"neardup:transcript": 0.0003}),
+     "max_count=3, max_permille=3.0E-4"),
+])
+def test_neardup_verdict_names_failing_budget(gates, budget):
+    """The near-dup verdict's own wording names every configured budget;
+    the default one is unchanged, so default reports keep their bytes."""
+    from codeclone_spark.plans.runner import _neardup_verdict
+
+    counts = [("p0", "audio:snr", 1, 1), ("p0", "neardup:transcript", 26, 26)]
+    verdict = _neardup_verdict(gates, {"n_clusters": 26, "n_new": 26}, counts, 2_004)
+    assert verdict[2:4] == (
+        False,
+        f"neardup:transcript: 26 new near-dup cluster(s) exceed budget ({budget})",
+    )

@@ -29,7 +29,6 @@ def test_stream_validate_matches_batch(spark, tiny_dir, tiny_run, tmp_path):
         fixtures_dir=tiny_dir,
         out_dir=out,
         checkpoint_dir=ckpt,
-        trigger_once=True,
     )
     q.awaitTermination(300)
     viol = spark.read.parquet(out)
@@ -49,7 +48,6 @@ def test_stream_validate_matches_batch(spark, tiny_dir, tiny_run, tmp_path):
         fixtures_dir=tiny_dir,
         out_dir=out,
         checkpoint_dir=ckpt,
-        trigger_once=True,
     )
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == viol.count()
@@ -130,9 +128,7 @@ def test_stream_drift_monitor(spark, tiny_dir, tmp_path):
         ),
     )
     out, ckpt = str(tmp_path / "drift"), str(tmp_path / "ckpt")
-    q = stream_drift_monitor(
-        spark, f"{tiny_dir}/clips", base, out, ckpt, trigger_once=True
-    )
+    q = stream_drift_monitor(spark, f"{tiny_dir}/clips", base, out, ckpt)
     assert q.awaitTermination(300)
     rows = spark.read.parquet(out).collect()
     assert rows and all(r["pass"] for r in rows)
@@ -163,9 +159,7 @@ def test_stream_drift_monitor(spark, tiny_dir, tmp_path):
     doc["meta"]["payload_sha256"] = bl.payload_sha256(payload)
     json.dump(doc, open(base, "w"))
     out2, ckpt2 = str(tmp_path / "drift2"), str(tmp_path / "ckpt2")
-    q2 = stream_drift_monitor(
-        spark, f"{tiny_dir}/clips", base, out2, ckpt2, trigger_once=True
-    )
+    q2 = stream_drift_monitor(spark, f"{tiny_dir}/clips", base, out2, ckpt2)
     assert q2.awaitTermination(300)
     rows2 = spark.read.parquet(out2).collect()
     assert rows2 and all(not r["pass"] for r in rows2)
@@ -176,9 +170,7 @@ def test_stream_drift_monitor(spark, tiny_dir, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="untrusted baseline"):
-        stream_drift_monitor(
-            spark, f"{tiny_dir}/clips", base, out2, ckpt2, trigger_once=True
-        )
+        stream_drift_monitor(spark, f"{tiny_dir}/clips", base, out2, ckpt2)
 
 
 def test_stream_neardup_row_keys_match_batch(spark):
