@@ -76,11 +76,14 @@ def _structured_cases() -> dict[str, list[tuple[str, str]]]:
     }
 
 
-def test_random_graphs_match_union_find(spark, tmp_path):
+@pytest.mark.parametrize("seed_base", [4, 0])
+def test_random_graphs_match_union_find(spark, tmp_path, seed_base):
+    """*seed_base* shifts the seeds of the three random graphs, so the two
+    cases check six distinct random graphs alongside the structured ones."""
     cases = dict(_structured_cases())
-    cases["sparse_50"] = _random_edges(1, 50, 30)
-    cases["dense_30"] = _random_edges(2, 30, 120)
-    cases["forest_60"] = _random_edges(3, 60, 25)
+    cases["sparse_50"] = _random_edges(seed_base + 1, 50, 30)
+    cases["dense_30"] = _random_edges(seed_base + 2, 30, 120)
+    cases["forest_60"] = _random_edges(seed_base + 3, 60, 25)
     for name, edges in cases.items():
         expected = _uf_components(edges)
         df = spark.createDataFrame(edges, ["id_a", "id_b"])
@@ -90,7 +93,7 @@ def test_random_graphs_match_union_find(spark, tmp_path):
                 df, scratch_dir=str(tmp_path / name)
             ).collect()
         }
-        assert got == expected, name
+        assert got == expected, f"{name} (seed_base={seed_base})"
 
 
 def test_integer_ids_match_union_find(spark, tmp_path):
