@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import shutil
 import sys
 
 from codeclone_spark import EXIT_CONTRACT_ERROR, EXIT_USAGE_ERROR
@@ -164,6 +166,10 @@ def main(argv: list[str] | None = None) -> int:
                 .mode("overwrite")
                 .parquet(out)
             )
+            # nothing reads the scratch once keep_list is written (a
+            # remote out dir, such as s3://, keeps it)
+            if os.path.isdir(scratch):
+                shutil.rmtree(scratch)
             counts = {
                 r["reason"]: int(r["n"])
                 for r in spark.read.parquet(out)
@@ -223,30 +229,32 @@ def main(argv: list[str] | None = None) -> int:
     except ValueError as e:
         print(f"usage error: --suppress expects RULE:PART ({e})", file=sys.stderr)
         return EXIT_USAGE_ERROR
+    try:
+        cfg = RunConfig(
+            data_dir=args.data_dir,
+            out_dir=args.out_dir,
+            baseline_path=args.baseline,
+            gating=not args.no_gating,
+            update_baseline=args.update_baseline,
+            wave_size=args.wave_size,
+            test_lane_pattern=args.test_lane_pattern,
+            suppressions=list(args.suppress),
+            iceberg_table=args.iceberg_table,
+            partitioned_sinks=args.partitioned_sinks,
+            neardup_transcript=args.neardup_transcript,
+            neardup_threshold=args.neardup_threshold,
+            neardup_max_bucket=args.neardup_max_bucket,
+            gates=gates,
+        )
+    except ValueError as e:
+        print(f"usage error: {e}", file=sys.stderr)
+        return EXIT_USAGE_ERROR
 
     from codeclone_spark.session import get_spark
 
     spark = get_spark(app_name="codeclone-spark-run", cores=args.cores)
     try:
-        res = run(
-            spark,
-            RunConfig(
-                data_dir=args.data_dir,
-                out_dir=args.out_dir,
-                baseline_path=args.baseline,
-                gating=not args.no_gating,
-                update_baseline=args.update_baseline,
-                wave_size=args.wave_size,
-                test_lane_pattern=args.test_lane_pattern,
-                suppressions=list(args.suppress),
-                iceberg_table=args.iceberg_table,
-                partitioned_sinks=args.partitioned_sinks,
-                neardup_transcript=args.neardup_transcript,
-                neardup_threshold=args.neardup_threshold,
-                neardup_max_bucket=args.neardup_max_bucket,
-                gates=gates,
-            ),
-        )
+        res = run(spark, cfg)
     except Exception as e:  # unreadable input etc. -> contract error
         print(f"CONTRACT_ERROR: {type(e).__name__}: {e}", file=sys.stderr)
         return EXIT_CONTRACT_ERROR

@@ -1,9 +1,9 @@
 """Per-partition checkpoint ledger — the resume mechanism.
 
 Analog of the reference's incremental cache: a durable map
-``partition -> {status, rows, violations, digest, elapsed_ms, partials}``
-(cache-signature semantics of ``core/discovery.py:118-190``; phase metrics
-like ``analysis/phase_ledger.py:16-39``).  A partition is *done* only after
+``partition -> {status, wave, data_sig, baseline_sha, rule_counts,
+suppressed, partials}`` (cache-signature semantics of
+``core/discovery.py:118-190``).  A partition is *done* only after
 its wave's outputs AND the ledger entry are durably written (atomic rename,
 reference ``_atomic_write_json`` clone_baseline.py:394-400); a re-run prunes
 done partitions at the SCAN level (partition-column filter → zero bytes read)
@@ -105,26 +105,17 @@ class Ledger:
                         else:
                             self.partitions[rec["part"]] = rec["entry"]
 
-    def done_parts(
-        self,
-        data_sigs: dict[str, str] | None = None,
-        baseline_sha: str | None = None,
-    ) -> set[str]:
-        """Partitions safe to skip: status done AND (when signatures are
-        supplied) both the data signature and the baseline identity still
-        match what the entry was computed against.  Entries written before
-        signatures existed (no data_sig field) are conservatively re-run
-        when a signature check is requested."""
-        out = set()
-        for p, e in self.partitions.items():
-            if e.get("status") != "done":
-                continue
-            if data_sigs is not None and e.get("data_sig") != data_sigs.get(p):
-                continue
-            if baseline_sha is not None and e.get("baseline_sha") != baseline_sha:
-                continue
-            out.add(p)
-        return out
+    def done_parts(self, data_sigs: dict[str, str], baseline_sha: str) -> set[str]:
+        """Partitions safe to skip: status done AND both the data signature
+        and the baseline identity still match what the entry was computed
+        against.  Entries written before signatures existed (no data_sig
+        field) are conservatively re-run."""
+        return {
+            p for p, e in self.partitions.items()
+            if e.get("status") == "done"
+            and e.get("data_sig") == data_sigs.get(p)
+            and e.get("baseline_sha") == baseline_sha
+        }
 
     def record(self, part: str, entry: dict[str, Any]) -> None:
         full = {"status": "done", **entry}

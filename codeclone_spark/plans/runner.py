@@ -25,6 +25,7 @@ import hashlib
 import json
 import os
 import re
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -83,6 +84,11 @@ from codeclone_spark.sources import validate_clips_schema, validate_data_dir
 
 # Ranked triage queue length (reference hotlist caps, report/suggestions.py)
 REVIEW_QUEUE_K = 10
+# Violation exemplar rows written per (rule, partition): an all-null column
+# at 10^12 rows must not write 10^12 rows.  Gates and report totals use the
+# true pre-cap counts; the excess is findings.suppressed_exemplars
+# (reference suppressed_* counts, SURVEY §2.8).
+EXEMPLAR_CAP = 10_000
 _SEV_WEIGHT = {"error": 3, "warn": 1}
 
 
@@ -128,20 +134,19 @@ class RunConfig:
     neardup_threshold: float = 0.9
     # LSH bucket cap (caps as backpressure) for the candidate stage
     neardup_max_bucket: int = 1024
-    # Per-(rule, partition) violation exemplar cap: a pathological table
-    # (e.g. an all-null column at 10^12 rows) must not materialize 10^12
-    # violation rows.  Gate counts/verdicts/report totals use TRUE pre-cap
-    # tallies (ledger rule_counts); excess exemplar rows are reported as
-    # findings.suppressed_exemplars (reference suppressed_* counts, SURVEY
-    # §2.8).  --update-baseline bypasses the cap so accepted keys stay
-    # complete.
-    exemplar_cap: int = 10_000
-    # --update-baseline: accepted sets up to this size are inlined in the
-    # baseline JSON (broadcast-join shape); larger sets are written as a
-    # sorted parquet side table next to the baseline and anti-joined
-    # distributively — the keys never materialize on the driver.
-    accepted_inline_max: int = 10_000
     gates: GateConfig = field(default_factory=GateConfig)
+
+    def __post_init__(self) -> None:
+        # each would silently validate nothing: no wave (wave size < 1), no
+        # LSH bucket (negative cap), no verified pair (threshold > 1)
+        if self.wave_size is not None and self.wave_size < 1:
+            raise ValueError(f"wave_size {self.wave_size} < 1")
+        if self.neardup_max_bucket < 0:
+            raise ValueError(f"neardup_max_bucket {self.neardup_max_bucket} < 0")
+        if not 0 < self.neardup_threshold <= 1:
+            raise ValueError(
+                f"neardup_threshold {self.neardup_threshold} outside (0, 1]"
+            )
 
 
 @dataclass
@@ -247,11 +252,8 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
     # --- waves
     waves_dir = os.path.join(cfg.out_dir, "waves")
     acc_df = _accepted_keys(spark, cfg, accepted, accepted_ref)
-    # cap in (0, None) = capping disabled (0 kept its historical "uncapped"
-    # meaning; a run that truly wants zero exemplar rows should post-filter
-    # the violations output, not zero the cap).  --update-baseline bypasses
-    # the cap: accepted keys must be complete.
-    cap = None if (cfg.update_baseline or not cfg.exemplar_cap) else cfg.exemplar_cap
+    # --update-baseline bypasses the cap: accepted keys must be complete
+    cap = None if cfg.update_baseline else EXEMPLAR_CAP
     for wave in _chunks(todo, cfg.wave_size):
         wave_name = "wave-" + hashlib.sha1("|".join(wave).encode()).hexdigest()[:12]
         in_wave = F.col("part").isin(wave)
@@ -259,7 +261,6 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
             clips.filter(in_wave), fixtures_meta, fixtures_pcm.filter(in_wave)
         )
         facts = facts.persist()
-        wave_t0 = time.monotonic()
         rule_stats = _wave_violations(
             facts, acc_df, cap, os.path.join(waves_dir, wave_name, "violations"),
             n_files=1 if len(wave) <= 8 else 8,
@@ -267,14 +268,13 @@ def run(spark: SparkSession, cfg: RunConfig) -> RunResult:
         _mark("wave_facts_and_row_rules")
         aggs, qsk_by_col = _wave_partials(facts)
         _mark("wave_partition_aggs")
-        elapsed_ms = int((time.monotonic() - wave_t0) * 1000)
-        for part, entry in _ledger_entries(wave, aggs, qsk_by_col, rule_stats).items():
+        entries = _ledger_entries(wave, aggs, qsk_by_col, rule_stats, cap)
+        for part, entry in entries.items():
             ledger.record(part, {
                 "wave": wave_name,
                 "data_sig": data_sigs.get(part, "absent"),
                 "baseline_sha": accepted_sha,
                 **entry,
-                "elapsed_ms": elapsed_ms,  # wave wall (shared)
             })
         facts.unpersist()
         decoded.unpersist()
@@ -519,71 +519,33 @@ def _accepted_keys(
 def _wave_violations(
     facts: DataFrame, acc_df: DataFrame, cap: int | None, out_path: str, n_files: int
 ) -> list[Any]:
-    """Row rules over one wave's facts.  Writes the capped exemplar rows to
-    *out_path* and returns per-(partition, rule) stats rows: ``n_viol``,
-    ``n_new``, ``n_kept`` and the exemplar ``digest``.
+    """Row rules over one wave's facts, read by two jobs that share only the
+    cached facts and so overlap (guide §2.6).  One counts, uncapped, each
+    (partition, rule) cell's ``n_viol`` and ``n_new`` (keys the baseline
+    does not accept): gates, report totals and the ledger read these.  The
+    other writes the cell's first *cap* rows by (clip_id, observed) to
+    *out_path*: the cap bounds output only (SURVEY §2.8)."""
 
-    The exemplar cap bounds OUTPUT only (reference max_blocks/max_segments
-    caps, SURVEY §2.8).  True per-(rule, partition) counts — including the
-    baseline-accepted split — are aggregated from the UNCAPPED frame in the
-    same pass as the exemplar digest, so gate verdicts, report totals and
-    ledger metrics never see truncated numbers."""
-    viol = evaluate_row_rules(facts)
-    viol = viol.withColumn("vkey", violation_key(viol)).join(
-        acc_df, "vkey", "left"
-    )
-    w = Window.partitionBy("rule_id", "partition").orderBy(
-        "clip_id", "observed"
-    )
-    viol = viol.withColumn("_rk", F.row_number().over(w))
-    keep = F.lit(True) if cap is None else (F.col("_rk") <= cap)
-    viol = viol.withColumn("_keep", keep).persist()
+    def _count() -> list[Any]:
+        viol = evaluate_row_rules(facts)
+        viol = viol.withColumn("vkey", violation_key(viol)).join(acc_df, "vkey", "left")
+        return viol.groupBy("partition", "rule_id").agg(
+            F.count(F.lit(1)).alias("n_viol"),
+            F.count(F.when(F.col("accepted").isNull(), 1)).alias("n_new"),
+        ).collect()
 
-    # ONE aggregation: true counts + new-vs-known split + suppressed +
-    # per-(partition, rule) exemplar digest (digest input bounded by cap).
-    def _collect_rule_stats():
-        kept = F.when(
-            F.col("_keep"), F.concat_ws("|", "rule_id", "clip_id", "observed")
-        )
-        return (
-            viol.groupBy("partition", "rule_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_viol"),
-                F.sum(
-                    F.when(F.col("accepted").isNull(), 1).otherwise(0)
-                ).alias("n_new"),
-                F.sum(F.col("_keep").cast("long")).alias("n_kept"),
-                F.sha2(
-                    F.concat_ws(";", F.sort_array(F.collect_list(kept))), 256
-                ).alias("digest"),
-            )
-            .collect()
-        )
+    def _write() -> None:
+        viol = evaluate_row_rules(facts)
+        if cap is not None:
+            cell = Window.partitionBy("rule_id", "partition")
+            rank = F.row_number().over(cell.orderBy("clip_id", "observed"))
+            viol = viol.withColumn("_rk", rank).filter(F.col("_rk") <= cap).drop("_rk")
+        viol.repartition(n_files).write.mode("overwrite").parquet(out_path)
 
-    def _write_exemplars() -> None:
-        (
-            viol.filter(F.col("_keep"))
-            .drop("vkey", "accepted", "_rk", "_keep")
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(out_path)
-        )
-
-    # Independent consumers of the cached viol frame (stats collect +
-    # exemplar write): overlap them so the second job back-fills the
-    # first's tail (guide §2.6).  If both compute the same partition of
-    # the persist (say on two executors), they still cannot disagree:
-    # rows tied on (clip_id, observed) within one (rule_id, partition)
-    # are identical in every written column, because expected and
-    # severity are per-rule literals, so whichever tied copy the cap
-    # keeps, the written rows and the digest are the same.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stats = pool.submit(_collect_rule_stats)
-        f_write = pool.submit(_write_exemplars)
-        rule_stats = f_stats.result()
+        f_count, f_write = pool.submit(_count), pool.submit(_write)
         f_write.result()
-    viol.unpersist()
-    return rule_stats
+        return f_count.result()
 
 
 def _wave_partials(
@@ -629,23 +591,19 @@ def _empty_partials() -> dict[str, Any]:
 
 def _ledger_entries(
     wave: list[str], aggs: list[Any], qsk_by_col: dict[str, dict[str, list[int]]],
-    rule_stats: list[Any],
+    rule_stats: list[Any], cap: int | None,
 ) -> dict[str, dict[str, Any]]:
-    """Fold one wave's per-rule stats and partition partials into one
-    ledger entry per partition (driver-side, wave-sized): true counts,
-    suppressed exemplars, a stable digest.  A listed part= directory with
-    ZERO rows produces no aggregate row; it still gets an entry, or every
-    resume would KeyError on it and the run could never converge."""
+    """Fold one wave's per-rule counts and partition partials into one
+    ledger entry per partition (driver-side, wave-sized).  ``suppressed`` is
+    exact: the write ranks each (rule, partition) cell 1..n_viol and keeps
+    min(n_viol, cap) rows.  A listed part= directory with ZERO rows produces
+    no aggregate row; it still gets an entry, or every resume would KeyError
+    on it and the run could never converge."""
     part_rules: dict[str, dict[str, list[int]]] = {}
-    part_supp: dict[str, int] = {}
-    part_digs: dict[str, list[str]] = {}
     for r in rule_stats:
-        p = r["partition"]
-        part_rules.setdefault(p, {})[r["rule_id"]] = [
+        part_rules.setdefault(r["partition"], {})[r["rule_id"]] = [
             int(r["n_viol"]), int(r["n_new"])
         ]
-        part_supp[p] = part_supp.get(p, 0) + int(r["n_viol"] - r["n_kept"])
-        part_digs.setdefault(p, []).append(f"{r['rule_id']}:{r['digest']}")
     partials = {r["part"]: r.asDict() for r in aggs}
     out: dict[str, dict[str, Any]] = {}
     for part in wave:
@@ -671,14 +629,10 @@ def _ledger_entries(
                 for spec in NUMERIC_STATS_COLUMNS
             },
             "sr_counts": {str(v): int(d[f"sr_{v}"]) for v in ALLOWED_SR},
-            "violations": sum(v[0] for v in rules.values()),
-            "suppressed": part_supp.get(part, 0),
-            "rule_counts": rules,
-            "digest": (
-                hashlib.sha256(";".join(sorted(part_digs[part])).encode()).hexdigest()
-                if part in part_digs
-                else "0" * 64
+            "suppressed": 0 if cap is None else sum(
+                max(nv - cap, 0) for nv, _n_new in rules.values()
             ),
+            "rule_counts": rules,
         }
     return out
 
@@ -753,6 +707,7 @@ def _neardup_stage(
             F.count(F.lit(1)).alias("size"),
             F.min("part").alias("partition"),
         ).write.mode("overwrite").parquet(nd_clusters_path)
+        shutil.rmtree(nd_scratch)  # resume keys on the clusters, not on it
         ledger.record(nd_key, {"neardup_sig": nd_sig})
         ledger.save("neardup")
     acc_ck = F.broadcast(
@@ -1176,6 +1131,11 @@ def _seal_report(report: dict[str, Any], run_digest: str, out_dir: str) -> None:
         json.dump(report, f, sort_keys=True, indent=1)
 
 
+# --update-baseline inlines accepted sets up to this size in the baseline JSON;
+# larger ones go to a parquet side table, anti-joined off the driver.
+ACCEPTED_INLINE_MAX = 10_000
+
+
 def _update_baseline(
     cfg: RunConfig, all_viol: DataFrame, snapshot: dict[str, Any] | None,
     neardup_clusters: DataFrame | None, current_schema: dict[str, str],
@@ -1189,15 +1149,15 @@ def _update_baseline(
         novkey.withColumn("vkey", violation_key(novkey)).select("vkey").distinct()
     )
     # one bounded action decides inline vs sidecar: at most
-    # accepted_inline_max + 1 keys ever reach the driver
+    # ACCEPTED_INLINE_MAX + 1 keys ever reach the driver
     all_keys = [
         r["vkey"]
         for r in distinct_keys.orderBy("vkey")
-        .limit(cfg.accepted_inline_max + 1)
+        .limit(ACCEPTED_INLINE_MAX + 1)
         .collect()
     ]
     ref = None
-    if len(all_keys) > cfg.accepted_inline_max:
+    if len(all_keys) > ACCEPTED_INLINE_MAX:
         # large debt set: sorted parquet side table, written and
         # digest-folded entirely executor-side (never O(keys) driver)
         ref = bl.write_accepted_sidecar(distinct_keys, cfg.baseline_path)

@@ -74,6 +74,47 @@ def test_run_rejects_bad_suppression_before_spark(directive, monkeypatch, capsys
     assert "usage error: --suppress" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("flags", [
+    ["--wave-size", "-2"],  # once chunked the partitions into no wave
+    ["--wave-size", "0"],   # once a ValueError from range(), exit 2
+    ["--neardup-max-bucket", "-1"],  # would drop every LSH bucket
+    ["--neardup-threshold", "1.5"],  # would verify no pair
+    ["--neardup-threshold", "0"],
+])
+def test_run_rejects_bad_settings_before_spark(flags, monkeypatch, capsys):
+    def no_spark(*_a, **_k):
+        raise AssertionError("a Spark session started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    rc = main(["run", "--data-dir", "d", "--out-dir", "o", *flags])
+    assert rc == EXIT_USAGE_ERROR
+    assert f"usage error: {flags[0][2:].replace('-', '_')}" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("kwargs", [
+    {"wave_size": 0},
+    {"wave_size": -2},
+    {"neardup_max_bucket": -1},
+    {"neardup_threshold": 0.0},
+    {"neardup_threshold": 1.0001},
+])
+def test_run_config_rejects_settings_that_validate_nothing(kwargs):
+    from codeclone_spark.plans.runner import RunConfig
+
+    with pytest.raises(ValueError, match=next(iter(kwargs))):
+        RunConfig(data_dir="d", out_dir="o", **kwargs)
+
+
+def test_run_config_accepts_the_edges_of_its_ranges():
+    from codeclone_spark.plans.runner import RunConfig
+
+    RunConfig(data_dir="", out_dir="")  # the defaults
+    RunConfig(
+        data_dir="d", out_dir="o", wave_size=1, neardup_max_bucket=0,
+        neardup_threshold=1.0,
+    )
+
+
 def test_suppression_of_unknown_rule_is_rejected():
     """A directive for a rule the registry lacks would suppress nothing
     while the run looks suppressed."""

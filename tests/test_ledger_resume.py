@@ -182,16 +182,21 @@ def test_accepted_sidecar_roundtrip(spark, tmp_path):
     assert not trust.trusted
 
 
-def test_update_baseline_sidecar_end_to_end(spark, tiny_dir, tmp_path_factory):
-    """accepted_inline_max=0 forces the sidecar path; the gated re-run
+def test_update_baseline_sidecar_end_to_end(
+    spark, tiny_dir, tmp_path_factory, monkeypatch
+):
+    """An inline maximum of 0 forces the sidecar path; the gated re-run
     accepts the debt through the distributed anti-join and stays green."""
+    from codeclone_spark.plans import runner
+
+    monkeypatch.setattr(runner, "ACCEPTED_INLINE_MAX", 0)
     out1 = str(tmp_path_factory.mktemp("sc_accept"))
     base = os.path.join(out1, "baseline.json")
     r1 = run(
         spark,
         RunConfig(
             data_dir=tiny_dir, out_dir=out1, baseline_path=base,
-            update_baseline=True, accepted_inline_max=0,
+            update_baseline=True,
         ),
     )
     assert r1.exit_code == EXIT_OK
@@ -263,9 +268,19 @@ def test_second_column_joins_stats_family(spark, tiny_dir, tiny_run, tmp_path_fa
     assert r2.report["metrics"]["drift"]["drift:quantile:rms"] <= 1e-9
 
 
-def test_exemplar_cap_zero_means_uncapped(spark, tiny_dir, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("cap0"))
-    res = run(spark, RunConfig(data_dir=tiny_dir, out_dir=out, exemplar_cap=0))
+def test_update_baseline_bypasses_exemplar_cap(
+    spark, tiny_dir, tmp_path_factory, monkeypatch
+):
+    """The accepted keys of a baseline update must be complete, so that run
+    writes every violation row whatever the cap, and suppresses none."""
+    from codeclone_spark.plans import runner
+
+    monkeypatch.setattr(runner, "EXEMPLAR_CAP", 1)
+    out = str(tmp_path_factory.mktemp("cap_bypass"))
+    res = run(spark, RunConfig(
+        data_dir=tiny_dir, out_dir=out,
+        baseline_path=os.path.join(out, "baseline.json"), update_baseline=True,
+    ))
     assert res.report["findings"]["suppressed_exemplars"] == 0
     viol = spark.read.parquet(res.violations_path)
     assert viol.count() == res.report["findings"]["total_violations"]

@@ -244,12 +244,15 @@ def test_ladder_resume_signature_keyed(
     baseline-independent, so it resumes by (corpus signature, ladder
     config) key: a re-run over the same out_dir skips the ladder entirely
     (resumed=True) and lands on an identical digest; a ladder-config
-    change invalidates the cache and recomputes."""
+    change invalidates the cache and recomputes.  The ladder's scratch
+    is removed once the clusters are written: resume never reads it."""
     base, _ = accepted_baseline
     out = str(tmp_path_factory.mktemp("nd_resume"))
+    scratch = os.path.join(out, "neardup_scratch")
     r1 = run(spark, _cfg(neardup_dir, out, baseline_path=base))
     assert r1.report["metrics"]["neardup"]["resumed"] is False
     assert r1.exit_code == EXIT_OK
+    assert not os.path.exists(scratch)
     r2 = run(spark, _cfg(neardup_dir, out, baseline_path=base))
     nd = r2.report["metrics"]["neardup"]
     assert nd["resumed"] is True
@@ -268,3 +271,4 @@ def test_ladder_resume_signature_keyed(
     )
     r3 = run(spark, cfg3)
     assert r3.report["metrics"]["neardup"]["resumed"] is False
+    assert not os.path.exists(scratch)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -343,6 +344,7 @@ def test_dedup_cli_manifest(spark, tmp_path, docs):
         ]
     )
     assert rc == 0
+    assert os.listdir(out) == ["keep_list"]  # the ladder's scratch is gone
     got = {
         r["id"]: (r["keep"], r["reason"])
         for r in spark.read.parquet(f"{out}/keep_list").collect()
